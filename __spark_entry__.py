@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 `entry` runs the flagship extraction pipeline (derived transcripts ->
-salted repartition -> Arrow-batched extraction UDF -> window-ordered
+Arrow-batched extraction UDF as a narrow map -> window-ordered
 reassembly) at sf0.001. `queries()` registers every implemented operator
 from SURVEY.md §2 plus the training-data-pipeline operators; `oracle_sql()`
 returns the independent DuckDB SQL for each SQL-expressible one.

@@ -23,6 +23,142 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+HEADLINE = [
+    "manifest_upsert",
+    "match_offsets_sql",
+    "rollup_revenue",
+    "pricing_summary",
+    "revenue_by_region",
+    "resume_anti_join",
+    "ordered_concat",
+    "sessionize_events",
+    "clean_canonicalize",
+    "html_strip",
+    "exact_dedup",
+    "minhash_lsh_pairs",
+    "ann_cosine_topk",
+    "embed_neardup_blocked",
+    "doc_fingerprint",
+    "token_counts",
+]
+
+# round-2+ operators, timed the same way but totaled separately so the
+# headline `value` stays comparable with earlier rounds' 17-query suite
+EXTENDED = [
+    "ranked_search",
+    "prefix_search",
+    "suggest_search",
+    "fuzzy_search",
+    "typo_ranked_search",
+    "phrase_search",
+    "top_terms_per_doc",
+    "search_with_snippets",
+    "index_incremental_merge",
+    "token_counts_bpe",
+    "token_counts_bpe_1k",
+    "dedup_clusters_lsh",
+    "quality_repetition",
+    "chunk_dedup",
+    "line_dedup_corpus",
+    "line_dedup_corpus_incremental",
+    "conv_boilerplate_strip",
+    "dsir_importance",
+    "dsir_select",
+    "dsir_importance_incremental",
+    "bloom_dedup_prefilter",
+    "heavy_hitters_cms",
+    "distinct_count_hll",
+    "distinct_count_hll_incremental",
+    "quantile_hist",
+    "quantile_hist_incremental",
+    "funnel_conversion",
+    "funnel_windowed",
+    "retention_cohorts",
+    "retention_cohorts_incremental",
+    "event_transitions",
+    "funnel_latency",
+    "decontaminate",
+    "lm_score",
+    "sequence_pack",
+    "curation_pipeline_v2",
+    "mixture_weights",
+    "corpus_shuffle",
+    "substring_dedup",
+    "unicode_clean",
+    "cluster_safe_split",
+    "kmeans_assign",
+    "semdedup",
+    "pack_examples",
+    "asof_join",
+    "range_join_banded",
+    "pii_scrub",
+    "hash_sample",
+    "multi_keyword_spans",
+    "disjunctive_upsert",
+    "flaky_enrichment",
+    "lang_id",
+    "ann_ivf_topk",
+    "dedup_clusters",
+    "curation_pipeline",
+    "event_type_pivot",
+    "set_ops_users",
+    "stratified_sample",
+    "unpivot_doc_stats",
+    "rank_functions",
+    "lateral_top_orders",
+    "image_header_probe",
+    "authorized_events",
+    "conv_dedup",
+    "conv_stats",
+    "conv_budget_truncate",
+    "tool_call_validate",
+    "conv_quality_gate",
+    "conv_pack",
+    "conv_training_pipeline",
+    "conv_loss_mask",
+    "conv_prefix_stats",
+    "conv_branch_dedup",
+    "conv_merge_roles",
+    "conv_tail_truncate",
+    "turn_boilerplate",
+    "best_of_n",
+    "preference_pairs",
+    "sft_examples",
+    "conv_lang_consistency",
+    "pii_pseudonymize",
+    "conv_decontaminate",
+    "prompt_safe_split",
+    "apply_mixture",
+    "chat_render",
+    "conv_neardup",
+    "doc_chunk",
+    "bpe_pair_census",
+    "bigram_lm",
+    "corpus_report",
+    "conv_dedup_fuzzy",
+    "quality_features",
+    "decontaminate_semantic",
+    "contrastive_pairs",
+    "incremental_conv_neardup",
+    "dedup_report",
+    "dedup_report_incremental",
+    "contrastive_pairs_incremental",
+    "incremental_embed_neardup",
+    "ann_ivf_topk_indexed",
+    "ann_ivf_topk_indexed_delta",
+    "image_decode_stats",
+    "audio_decode_stats",
+    "video_frame_sample",
+    "image_resize_stats",
+    "audio_frame_features",
+    "ann_pq_topk",
+    "ann_pq_rerank_topk",
+    "ann_ivfadc_topk",
+    "ann_ivf_topk_spill",
+    "per_source_cap",
+]
+
+
 def force(df) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
@@ -126,145 +262,11 @@ def main() -> None:
         **CONV_QUERIES,
         **DIALOGUE_QUERIES,
     }
-    headline = [
-        "manifest_upsert",
-        "match_offsets_sql",
-        "rollup_revenue",
-        "pricing_summary",
-        "revenue_by_region",
-        "resume_anti_join",
-        "ordered_concat",
-        "sessionize_events",
-        "clean_canonicalize",
-        "html_strip",
-        "exact_dedup",
-        "minhash_lsh_pairs",
-        "ann_cosine_topk",
-        "embed_neardup_blocked",
-        "doc_fingerprint",
-        "token_counts",
-    ]
-    for name in headline:
+    for name in HEADLINE:
         fn, _ = registry[name]
         best_of_two(name, lambda fn=fn: force(fn(spark, sf_dir)))
 
-    # round-2+ operators, timed the same way but totaled separately so the
-    # headline `value` stays comparable with earlier rounds' 17-query suite
-    extended = [
-        "ranked_search",
-        "prefix_search",
-        "suggest_search",
-        "fuzzy_search",
-        "typo_ranked_search",
-        "phrase_search",
-        "top_terms_per_doc",
-        "search_with_snippets",
-        "index_incremental_merge",
-        "token_counts_bpe",
-        "token_counts_bpe_jvm",
-        "token_counts_bpe_1k",
-        "dedup_clusters_lsh",
-        "quality_repetition",
-        "chunk_dedup",
-        "line_dedup_corpus",
-        "line_dedup_corpus_incremental",
-        "conv_boilerplate_strip",
-        "dsir_importance",
-        "dsir_select",
-        "dsir_importance_incremental",
-        "bloom_dedup_prefilter",
-        "heavy_hitters_cms",
-        "distinct_count_hll",
-        "distinct_count_hll_incremental",
-        "quantile_hist",
-        "quantile_hist_incremental",
-        "funnel_conversion",
-        "funnel_windowed",
-        "retention_cohorts",
-        "retention_cohorts_incremental",
-        "event_transitions",
-        "funnel_latency",
-        "decontaminate",
-        "lm_score",
-        "sequence_pack",
-        "curation_pipeline_v2",
-        "mixture_weights",
-        "corpus_shuffle",
-        "substring_dedup",
-        "unicode_clean",
-        "cluster_safe_split",
-        "kmeans_assign",
-        "semdedup",
-        "pack_examples",
-        "asof_join",
-        "range_join_banded",
-        "pii_scrub",
-        "hash_sample",
-        "multi_keyword_spans",
-        "disjunctive_upsert",
-        "flaky_enrichment",
-        "lang_id",
-        "ann_ivf_topk",
-        "dedup_clusters",
-        "curation_pipeline",
-        "event_type_pivot",
-        "set_ops_users",
-        "stratified_sample",
-        "unpivot_doc_stats",
-        "rank_functions",
-        "lateral_top_orders",
-        "image_header_probe",
-        "authorized_events",
-        "conv_dedup",
-        "conv_stats",
-        "conv_budget_truncate",
-        "tool_call_validate",
-        "conv_quality_gate",
-        "conv_pack",
-        "conv_training_pipeline",
-        "conv_loss_mask",
-        "conv_prefix_stats",
-        "conv_branch_dedup",
-        "conv_merge_roles",
-        "conv_tail_truncate",
-        "turn_boilerplate",
-        "best_of_n",
-        "preference_pairs",
-        "sft_examples",
-        "conv_lang_consistency",
-        "pii_pseudonymize",
-        "conv_decontaminate",
-        "prompt_safe_split",
-        "apply_mixture",
-        "chat_render",
-        "conv_neardup",
-        "doc_chunk",
-        "bpe_pair_census",
-        "bigram_lm",
-        "corpus_report",
-        "conv_dedup_fuzzy",
-        "quality_features",
-        "decontaminate_semantic",
-        "contrastive_pairs",
-        "incremental_conv_neardup",
-        "dedup_report",
-        "dedup_report_incremental",
-        "contrastive_pairs_incremental",
-        "incremental_embed_neardup",
-        "ann_ivf_topk_indexed",
-        "ann_ivf_topk_indexed_delta",
-        "image_decode_stats",
-        "audio_decode_stats",
-        "video_frame_sample",
-        "image_resize_stats",
-        "audio_frame_features",
-        "ann_pq_topk",
-        "ann_pq_rerank_topk",
-        "ann_ivfadc_topk",
-        "ann_ivf_topk_spill",
-        "per_source_cap",
-    ]
-    for name in extended:
+    for name in EXTENDED:
         fn, _ = registry[name]
         best_of_two(
             name,

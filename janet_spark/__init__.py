@@ -6,7 +6,8 @@ pipeline over multi-turn conversation transcripts:
 
 * vectorized Arrow/pandas-UDF extraction (HTML boilerplate strip, OCR text
   normalization, char-span offsets) — no per-row Python UDFs,
-* hash(conv_id) partitioning with explicit salting of skewed conversations,
+* extraction as a narrow map over the scan; skew handled where keys meet
+  (salted conv_id-hash bucket write, chunked reassembly),
 * window-ordered reassembly by (conv_id, turn_idx),
 * per-partition lineage + checkpoint manifests for resumable restarts,
 * training-data-pipeline operators (dedup, similarity search, text analysis).

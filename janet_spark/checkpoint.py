@@ -40,6 +40,21 @@ LINEAGE_SCHEMA = (
 )
 
 
+def partition_bucket(col_name: str = "conv_id", n_buckets: int = 32):
+    """Stable content-based bucket id — the checkpoint/lineage unit. Based
+    on the data (xxhash64 of conv_id), not on physical task ids, so resume
+    survives different parallelism levels between runs.
+
+    NULL keys coalesce to '' first: xxhash64(NULL) is NULL, which would
+    route those rows to a `part_bucket=__HIVE_DEFAULT_PARTITION__` dir the
+    commit loop cannot parse (and the resume anti-filter's non-null-safe
+    isin would re-drop them every run) — degenerate rows still deserve a
+    real bucket and a lineage row."""
+    return F.pmod(
+        F.xxhash64(F.coalesce(F.col(col_name), F.lit(""))), F.lit(n_buckets)
+    ).cast("int")
+
+
 def lineage_dir(output_path: str) -> str:
     return os.path.join(output_path, "_lineage")
 

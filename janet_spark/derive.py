@@ -62,8 +62,3 @@ def derived_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     docs.createOrReplaceTempView("_janet_documents")
     return spark.sql(SPARK_TRANSCRIPTS_SQL.format(documents="_janet_documents"))
-
-
-def duckdb_transcripts_cte() -> str:
-    """DuckDB rendering as a CTE body (expects a `documents` view)."""
-    return DUCKDB_TRANSCRIPTS_SQL

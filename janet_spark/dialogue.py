@@ -766,19 +766,6 @@ def _lang_case(words_fn, score_fn) -> str:
     END"""
 
 
-def _spark_turn_lang() -> str:
-    words = (
-        f"transform(regexp_extract_all(coalesce(text, ''), "
-        f"'{_LANG_WORD_RE}', 0), w -> lower(w))"
-    )
-
-    def score(stops: list[str]) -> str:
-        lst = "array(" + ",".join(f"'{w}'" for w in stops) + ")"
-        return f"size(filter({words}, w -> array_contains({lst}, w)))"
-
-    return _lang_case(words, score)
-
-
 def _duck_turn_lang() -> str:
     words = (
         f"list_transform(regexp_extract_all(coalesce(text, ''), "

@@ -13,7 +13,7 @@ truth being ``MERGES``:
   (sentinel spaces on each end);
 * each merge ``(a, b)``, in table order, performs ONE left-to-right
   non-overlapping replace of ``" a b "`` with ``" ab "`` — exactly the
-  semantics of both Python ``str.replace`` and DuckDB/Spark ``replace()``,
+  semantics of both Python ``str.replace`` and DuckDB ``replace()``,
   which is what makes the DuckDB oracle a true independent recomputation
   (a rendered chain of 48 nested ``replace()`` calls, no Python anywhere);
 * the token count is the number of space-separated chunks left.
@@ -130,15 +130,3 @@ def duckdb_staged_token_count_ctes(
         f"len(string_split(trim(__seg), ' ')) AS bpe_n FROM {prefix}{len(stages)})"
     )
     return ",\n".join(ctes), final
-
-
-def spark_word_token_count_sql(word_col: str) -> str:
-    """The SAME chain rendered as Spark SQL (JVM whole-stage codegen, no
-    Python) — Spark's split('', '') yields a trailing '' element, so the
-    char join goes through regexp_replace instead."""
-    expr = (
-        f"concat(' ', trim(regexp_replace({word_col}, '(.)', '$1 ')), ' ')"
-    )
-    for a, b in MERGES:
-        expr = f"replace({expr}, ' {a} {b} ', ' {a}{b} ')"
-    return f"size(split(trim({expr}), ' '))"

@@ -87,15 +87,6 @@ def _keep_by_stats(b: _Block) -> bool:
     return True
 
 
-def _classify(b: _Block) -> tuple[bool, str]:
-    """Return (keep, canonical_text)."""
-    raw = "".join(b.pieces)
-    text = canonicalize_str(raw)
-    if not text:
-        return False, ""
-    return _keep_by_stats(b), text
-
-
 def finish_blocks(
     blocks: list[_Block], canon_texts: list[str]
 ) -> tuple[str, list[tuple[int, int, str]], int, int]:

@@ -13,8 +13,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-
 MONTHS = {
     m: i + 1
     for i, m in enumerate(
@@ -154,10 +152,3 @@ def suggest_name(original_name: str, content: str) -> str:
     m = _DOC_NUMBER.search(content)
     number = f" {m.group(1)}" if m else ""
     return f"{date} {org} - {doctype}{number}.pdf"
-
-
-def suggest_name_batch(names: pd.Series, contents: pd.Series) -> pd.Series:
-    return pd.Series(
-        [suggest_name(n, c) for n, c in zip(names.fillna(""), contents.fillna(""))],
-        index=names.index,
-    )

@@ -5,8 +5,9 @@ after page joins (reference ``apps/legacy/src/services/pdf.ts:153-158``),
 ``join(' ')`` + global trim (``apps/ocr/src/lib/pdf-parse.ts:24-26``),
 ``'\\n\\n'`` page joins in the OCR path (``apps/legacy/src/services/ocr.ts:60``).
 This module pins ONE explicit, ordered contract and derives every
-implementation from the same rule table, so the Spark engine, the pure-pandas
-reference used in tests, and the DuckDB oracle SQL can never drift apart:
+implementation from the same rule table, so the Spark engine's vectorized
+pandas path, the scalar reference used in tests, and the DuckDB oracle SQL
+can never drift apart:
 
 1. newline normalization (CRLF/CR -> LF)
 2. NBSP / tab -> space
@@ -18,9 +19,8 @@ reference used in tests, and the DuckDB oracle SQL can never drift apart:
 8. strip leading/trailing whitespace
 
 Rules 1-3 are literal replaces; 4-8 are regexes kept inside the common
-subset of Python ``re``, Java ``java.util.regex`` (Spark ``regexp_replace``)
-and RE2 (DuckDB ``regexp_replace(..., 'g')``) so the same table compiles to
-all three dialects.
+subset of Python ``re`` and RE2 (DuckDB ``regexp_replace(..., 'g')``) so the
+same table compiles to both dialects.
 """
 
 from __future__ import annotations
@@ -46,8 +46,8 @@ LITERAL_REPLACES: list[tuple[str, str]] = [
 ]
 
 # (pattern, replacement) regex substitutions, applied in order after the
-# literal replaces. Replacement backrefs use \1 notation (translated to $1
-# for Spark). Patterns must stay in the re/Java/RE2 common subset.
+# literal replaces. Replacement backrefs use \1 notation. Patterns must
+# stay in the re/RE2 common subset.
 REGEX_RULES: list[tuple[str, str]] = [
     (r"([A-Za-z])-\n([A-Za-z])", r"\1\2"),  # OCR line-break dehyphenation
     (r" {2,}", " "),
@@ -186,15 +186,15 @@ def canonicalize_series(s: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# SQL emission — the same rule table rendered for each SQL dialect.
+# SQL emission — the same rule table rendered as DuckDB SQL (the oracle).
 # ---------------------------------------------------------------------------
 
 _CONTROL = {"\n": "chr(10)", "\r": "chr(13)", "\t": "chr(9)", "\u00a0": "chr(160)"}
 
 
-def _sql_string(value: str, *, escape_backslash: bool) -> str:
+def _sql_string(value: str) -> str:
     """Render a string as a SQL expression, splicing control chars via chr()
-    so no literal-escaping rules of either dialect are relied upon."""
+    so no literal-escaping rules of the dialect are relied upon."""
     parts: list[str] = []
     buf = ""
 
@@ -202,8 +202,6 @@ def _sql_string(value: str, *, escape_backslash: bool) -> str:
         nonlocal buf
         if buf:
             lit = buf.replace("'", "''")
-            if escape_backslash:
-                lit = lit.replace("\\", "\\\\")
             parts.append(f"'{lit}'")
             buf = ""
 
@@ -227,39 +225,12 @@ def duckdb_canonicalize_sql(col: str) -> str:
     """
     expr = f"coalesce({col}, '')"
     for find, repl in LITERAL_REPLACES:
-        expr = (
-            f"replace({expr}, {_sql_string(find, escape_backslash=False)}, "
-            f"{_sql_string(repl, escape_backslash=False)})"
-        )
+        expr = f"replace({expr}, {_sql_string(find)}, {_sql_string(repl)})"
     for pat, repl in REGEX_RULES:
         # DuckDB (RE2): pattern is a plain string literal (standard SQL does
         # not interpret backslash escapes, so \n reaches RE2 verbatim);
         # replacement backrefs use \1; 'g' for global.
         pat_sql = "'" + pat.replace("'", "''") + "'"
-        repl_sql = _sql_string(repl, escape_backslash=False)
+        repl_sql = _sql_string(repl)
         expr = f"regexp_replace({expr}, {pat_sql}, {repl_sql}, 'g')"
-    return expr
-
-
-def spark_canonicalize_sql(col: str) -> str:
-    """Render the canonicalizer as a Spark SQL expression over `col`.
-
-    This is the JVM-side fast path: a chain of built-in regexp_replace calls
-    stays inside whole-stage codegen — no Python round-trip — so bulk
-    canonicalization of 100 TB of text never leaves the executor JVM.
-    """
-    expr = f"coalesce({col}, '')"
-    for find, repl in LITERAL_REPLACES:
-        expr = (
-            f"replace({expr}, {_sql_string(find, escape_backslash=True)}, "
-            f"{_sql_string(repl, escape_backslash=True)})"
-        )
-    for pat, repl in REGEX_RULES:
-        # Spark SQL string literals interpret backslash escapes, so double
-        # them to deliver the pattern to java.util.regex intact; replacement
-        # backrefs use $1.
-        pat_sql = "'" + pat.replace("\\", "\\\\").replace("'", "''") + "'"
-        repl_java = re.sub(r"\\(\d)", r"$\1", repl)
-        repl_sql = _sql_string(repl_java, escape_backslash=True)
-        expr = f"regexp_replace({expr}, {pat_sql}, {repl_sql})"
     return expr

@@ -24,10 +24,6 @@ Scale notes:
   ``pmod(xxhash64(conv_id), n_buckets)`` with a conv-level write salt, and
   reassembly uses a two-level chunked concat (contiguous ``turn_idx div
   CHUNK`` ranges — order-preserving salting; see reassemble.py).
-* The explicit salted pre-partition (``partitioning.salted_repartition``)
-  remains available via ``pre_partition=True`` for operators that DO need
-  conv co-location before a per-group stage; results are identical either
-  way (tested).
 """
 
 from __future__ import annotations
@@ -38,15 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from janet_spark import checkpoint as ckpt
-from janet_spark.extract.text_rules import spark_canonicalize_sql
 from janet_spark.extract.udfs import EXTRACT_OUTPUT_DDL, extract_turns_iter
-from janet_spark.partitioning import (
-    DEFAULT_SALT_BUCKETS,
-    DEFAULT_SKEW_THRESHOLD,
-    detect_skewed_convs,
-    partition_bucket,
-    salted_repartition,
-)
 from janet_spark.reassemble import reassemble_conversations
 
 N_CHECKPOINT_BUCKETS = 32
@@ -54,105 +42,15 @@ N_CHECKPOINT_BUCKETS = 32
 # several reducers (and yields multiple parquet files per bucket dir)
 WRITE_SALT = 4
 
-# Whitespace code points where Python's str.strip() and Java's \s disagree
-# (FS/GS/RS/US, NEL, NBSP, ogham, en-quad..hair space, line/para sep,
-# narrow NBSP, math space, ideographic space). Rows containing any of these
-# route to the Python branch so span trim offsets stay byte-identical.
-_EXOTIC_WS_RE = (
-    "[\u001c-\u001f\u0085\u00a0\u1680\u2000-\u200a"
-    "\u2028\u2029\u202f\u205f\u3000]"
-)
 
-
-# text that canonicalizes to empty == text of only whitespace/separator
-# chars (the rule table only removes/replaces whitespace and maps ligatures
-# to letters, so nothing else can vanish) — checked with one cheap regex
-# instead of evaluating the full canonicalizer chain per row.
-_WS_ONLY_RE = (
-    "^[\\s\u001c-\u001f\u0085\u00a0\u1680\u2000-\u200a"
-    "\u2028\u2029\u202f\u205f\u3000]*$"
-)
-
-
-def _needs_python(col: str = "text"):
-    """Rows the JVM fast path cannot handle: null / whitespace-only
-    (tool-JSON fallback), potential HTML ('<'), or exotic whitespace
-    (span-trim parity)."""
-    return (
-        F.col(col).isNull()
-        | F.col(col).contains("<")
-        | F.col(col).rlike(_WS_ONLY_RE)
-        | F.col(col).rlike(_EXOTIC_WS_RE)
-    )
-
-
-def _jvm_plain_extract(df: DataFrame) -> DataFrame:
-    """The plain-text extraction branch as pure Spark SQL expressions —
-    whole-stage codegen, no Arrow round trip. Semantics identical to the
-    pandas plain path in extract/udfs.py: canonicalize (same generated rule
-    table, Spark dialect) + span = trimmed extent of the raw payload."""
-    canon = F.expr(spark_canonicalize_sql("text"))
-    start = (
-        F.length("text") - F.length(F.regexp_replace("text", r"^\s+", ""))
-    ).cast("int")
-    end = F.length(F.regexp_replace("text", r"\s+$", "")).cast("int")
-    return df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "ts",
-        canon.alias("extracted_text"),
-        F.array(
-            F.struct(
-                start.alias("start"), end.alias("end"), F.lit("plain").alias("kind")
-            )
-        ).alias("spans"),
-        F.lit(1).cast("int").alias("blocks_kept"),
-        F.lit(0).cast("int").alias("blocks_dropped"),
-        F.lit(1).cast("int").alias("span_count"),
-        F.lit(True).alias("ok"),
-    )
-
-
-def extract_only(
-    transcripts: DataFrame,
-    skew_threshold: int = DEFAULT_SKEW_THRESHOLD,
-    salt_buckets: int = DEFAULT_SALT_BUCKETS,
-    num_partitions: int | None = None,
-    detect_skew: bool = False,
-    pre_partition: bool = False,
-    jvm_fast_path: bool = False,
-) -> DataFrame:
+def extract_only(transcripts: DataFrame) -> DataFrame:
     """Pure transformation: transcripts -> per-turn extraction output.
     No I/O, no checkpointing — composable into queries and tests.
 
-    Default is the narrow plan (map over the scan) through the Arrow-batched
-    pandas UDF. ``jvm_fast_path=True`` instead extracts plain-text rows with
-    pure Spark SQL expressions (generated canonicalizer, trimmed span
-    extents) and sends only HTML/fallback/exotic-whitespace rows to the UDF
-    — tested byte-identical, but MEASURED SLOWER on this box (39.0s vs
-    26.5s on a 1.9M-turn clean input at 16 cores): Spark's UTF8String
-    replace/regexp chain allocates a copy per rule per row, where the
-    masked pandas canonicalizer rewrites only rows each rule matches. Kept
-    as the documented alternative — on a JVM with cheaper string handling
-    or a remote-shuffle cluster the routing flips. ``pre_partition=True``
-    inserts the explicit hash(conv_id)+salt repartition first — same
-    results, one extra shuffle."""
-    if pre_partition:
-        skewed = (
-            detect_skewed_convs(transcripts, skew_threshold) if detect_skew else []
-        )
-        src = salted_repartition(transcripts, skewed, salt_buckets, num_partitions)
-    elif num_partitions:
-        src = transcripts.repartition(num_partitions)
-    else:
-        src = transcripts
-    if not jvm_fast_path:
-        return src.mapInPandas(extract_turns_iter, schema=EXTRACT_OUTPUT_DDL)
-    needs_py = _needs_python("text")
-    py = src.filter(needs_py).mapInPandas(extract_turns_iter, schema=EXTRACT_OUTPUT_DDL)
-    jvm = _jvm_plain_extract(src.filter(~needs_py))
-    return jvm.unionByName(py)
+    A narrow map over the input's own partitioning through the
+    Arrow-batched pandas UDF; callers that want a different parallelism
+    repartition first."""
+    return transcripts.mapInPandas(extract_turns_iter, schema=EXTRACT_OUTPUT_DDL)
 
 
 def run_job(
@@ -175,7 +73,9 @@ def run_job(
     ckpt.check_bucket_config(output_path, n_buckets)
     ckpt.clean_stale_staging(output_path, run_id)
 
-    work = transcripts.withColumn("part_bucket", partition_bucket("conv_id", n_buckets))
+    work = transcripts.withColumn(
+        "part_bucket", ckpt.partition_bucket("conv_id", n_buckets)
+    )
     done = ckpt.completed_buckets(spark, output_path)
     work = ckpt.resume_filter(work, done)
 
@@ -198,7 +98,7 @@ def run_job(
 
     extracted = extract_only(
         work.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    ).withColumn("part_bucket", partition_bucket("conv_id", n_buckets))
+    ).withColumn("part_bucket", ckpt.partition_bucket("conv_id", n_buckets))
 
     # per-bucket stats ride the write job itself via observe() — no second
     # scan over the staged output (at 100 TB the old re-read was a full

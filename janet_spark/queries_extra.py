@@ -1800,7 +1800,11 @@ def _pq_adc_search(codes, lut, topk=_PQ_TOPK):
     scripts/pq_recall.py: broadcast the per-query lookup table, equi-join
     the narrow code table on (s, code), sum partial distances per
     (query, vector) — a map-side-combinable aggregation — and take the
-    top-`topk` by (dist asc, vec_id asc)."""
+    top-`topk` by (dist asc, vec_id asc). Oracle parity rests on rounding
+    that floating-point sum to 4 dp, not on exact arithmetic: Spark and
+    DuckDB add the partial distances in different orders, so unrounded
+    distances can differ in the last bits (and a near-tie could rank
+    differently)."""
     adc = (
         codes.join(F.broadcast(lut), ["s", "code"])
         .filter(F.col("qid") != F.col("vec_id"))

@@ -9,6 +9,8 @@ column is aliased identically on both sides (driver hashes by column name).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -360,46 +362,57 @@ FROM s GROUP BY user_id, session_seq ORDER BY user_id, session_seq
 # --- funnel / retention (event-analytics staples over the events table) -----
 
 
-def q_funnel_conversion(spark, sf_dir):
+_FUNNEL_STEPS = ("signup", "click", "purchase")
+
+
+def _funnel_labels(window_days: int | None) -> list[str]:
+    """Stage labels, tagged with the attribution rule of each later step."""
+    if window_days is None:
+        return ["signup", "click_after_signup", "purchase_after_click"]
+    return ["signup", f"click_{window_days}d", f"purchase_{window_days}d"]
+
+
+def _funnel(events: DataFrame, window_days: int | None = None) -> DataFrame:
     """Ordered-step funnel signup → click → purchase: a user advances a
     stage only with an event STRICTLY AFTER their previous-stage time
-    (min-ts per stage, the classic windowed-funnel semantics). Scale
-    shape: each stage is one map-side-combinable min-agg keyed by
+    (min-ts per stage, the classic windowed-funnel semantics) and, with
+    `window_days`, no later than that many days after it — unwindowed
+    funnels credit conversions forever, which no growth team accepts.
+    Scale shape: each stage is one map-side-combinable min-agg keyed by
     user_id plus one equi-join on user_id (same shuffle key end-to-end,
     so AQE coalesces; no stage touches more than the matching event-type
-    slice); the result is 3 rows, and the conversion denominator comes
+    slice; the window is one extra timestamp predicate in each stage
+    filter); the result is 3 rows, and the conversion denominator comes
     from a 3-row window, never a driver-side count."""
-    ev = t(spark, sf_dir, "events")
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
+    first, *rest = _FUNNEL_STEPS
+    reached = (
+        events.filter(F.col("event_type") == first)
         .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
+        .agg(F.min("ts").alias("t_prev"))
     )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-
-    def stage(df, idx, name):
-        return df.agg(F.count(F.lit(1)).alias("users")).select(
-            F.lit(idx).alias("stage_idx"), F.lit(name).alias("stage"), "users"
+    stages = [reached]
+    for step in rest:
+        after = F.col("ts") > F.col("t_prev")
+        if window_days is not None:
+            win = F.expr(f"INTERVAL {window_days} DAYS")
+            after = after & (F.col("ts") <= F.col("t_prev") + win)
+        reached = (
+            events.filter(F.col("event_type") == step)
+            .join(reached, "user_id")
+            .filter(after)
+            .groupBy("user_id")
+            .agg(F.min("ts").alias("t_prev"))
         )
+        stages.append(reached)
 
-    u = (
-        stage(s1, 1, "signup")
-        .union(stage(s2, 2, "click_after_signup"))
-        .union(stage(s3, 3, "purchase_after_click"))
-    )
+    labels = _funnel_labels(window_days)
+    counts = [
+        df.agg(F.count(F.lit(1)).alias("users")).select(
+            F.lit(idx).alias("stage_idx"), F.lit(label).alias("stage"), "users"
+        )
+        for idx, (df, label) in enumerate(zip(stages, labels), 1)
+    ]
+    u = reduce(DataFrame.union, counts)
     w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     base = F.max(F.when(F.col("stage_idx") == 1, F.col("users"))).over(w)
     # empty-funnel guard: Spark gives IEEE Infinity for double x/0 where
@@ -410,22 +423,32 @@ def q_funnel_conversion(spark, sf_dir):
     ).orderBy("stage_idx")
 
 
-ORACLE_FUNNEL_CONVERSION = """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'signup' GROUP BY 1
-), s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1
-), s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1
-), u AS (
-  SELECT 1 AS stage_idx, 'signup' AS stage, CAST(count(*) AS BIGINT) AS users FROM s1
-  UNION ALL
-  SELECT 2, 'click_after_signup', CAST(count(*) AS BIGINT) FROM s2
-  UNION ALL
-  SELECT 3, 'purchase_after_click', CAST(count(*) AS BIGINT) FROM s3
-)
+def _funnel_oracle(window_days: int | None = None) -> str:
+    """DuckDB rendering of `_funnel`: one CTE per stage, same labels."""
+    first, *rest = _FUNNEL_STEPS
+    ctes = [
+        f"s1 AS (\n  SELECT user_id, min(ts) AS t1 FROM events "
+        f"WHERE event_type = '{first}' GROUP BY 1\n)"
+    ]
+    for i, step in enumerate(rest, 2):
+        win = (
+            ""
+            if window_days is None
+            else f"\n    AND e.ts <= s{i - 1}.t{i - 1} + INTERVAL {window_days} DAY"
+        )
+        ctes.append(
+            f"s{i} AS (\n  SELECT e.user_id, min(e.ts) AS t{i} FROM events e "
+            f"JOIN s{i - 1} USING (user_id)\n  WHERE e.event_type = '{step}' "
+            f"AND e.ts > s{i - 1}.t{i - 1}{win} GROUP BY 1\n)"
+        )
+    counts = "\n  UNION ALL\n  ".join(
+        f"SELECT {i} AS stage_idx, '{label}' AS stage, "
+        f"CAST(count(*) AS BIGINT) AS users FROM s{i}"
+        for i, label in enumerate(_funnel_labels(window_days), 1)
+    )
+    ctes.append(f"u AS (\n  {counts}\n)")
+    return f"""
+WITH {", ".join(ctes)}
 SELECT stage_idx, stage, users,
        CASE WHEN max(CASE WHEN stage_idx = 1 THEN users END) OVER () > 0
             THEN round(users / CAST(max(CASE WHEN stage_idx = 1 THEN users END)
@@ -433,80 +456,15 @@ SELECT stage_idx, stage, users,
        END AS conversion_pct
 FROM u ORDER BY stage_idx
 """
+
+
+def q_funnel_conversion(spark, sf_dir):
+    return _funnel(t(spark, sf_dir, "events"))
 
 
 def q_funnel_windowed(spark, sf_dir):
-    """The production funnel: a stage counts only when its event falls
-    strictly after the previous stage AND within the attribution window
-    (7 days here) — unwindowed funnels credit conversions forever, which
-    no growth team accepts. Same plan shape as `funnel_conversion`
-    (user-keyed min-aggs + equi-joins, 3-row result); the window is one
-    extra JVM timestamp predicate pushed into each stage filter."""
-    ev = t(spark, sf_dir, "events")
-    win = F.expr("INTERVAL 7 DAYS")
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter((F.col("ts") > F.col("t1")) & (F.col("ts") <= F.col("t1") + win))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter((F.col("ts") > F.col("t2")) & (F.col("ts") <= F.col("t2") + win))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-
-    def stage(df, idx, name):
-        return df.agg(F.count(F.lit(1)).alias("users")).select(
-            F.lit(idx).alias("stage_idx"), F.lit(name).alias("stage"), "users"
-        )
-
-    u = (
-        stage(s1, 1, "signup")
-        .union(stage(s2, 2, "click_7d"))
-        .union(stage(s3, 3, "purchase_7d"))
-    )
-    w = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    base = F.max(F.when(F.col("stage_idx") == 1, F.col("users"))).over(w)
-    pct = F.when(base > 0, F.round(F.col("users") / base, 4))
-    return u.select(
-        "stage_idx", "stage", "users", pct.alias("conversion_pct")
-    ).orderBy("stage_idx")
-
-
-ORACLE_FUNNEL_WINDOWED = """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events WHERE event_type = 'signup' GROUP BY 1
-), s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2 FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = 'click' AND e.ts > s1.t1
-    AND e.ts <= s1.t1 + INTERVAL 7 DAY GROUP BY 1
-), s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3 FROM events e JOIN s2 USING (user_id)
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-    AND e.ts <= s2.t2 + INTERVAL 7 DAY GROUP BY 1
-), u AS (
-  SELECT 1 AS stage_idx, 'signup' AS stage, CAST(count(*) AS BIGINT) AS users FROM s1
-  UNION ALL
-  SELECT 2, 'click_7d', CAST(count(*) AS BIGINT) FROM s2
-  UNION ALL
-  SELECT 3, 'purchase_7d', CAST(count(*) AS BIGINT) FROM s3
-)
-SELECT stage_idx, stage, users,
-       CASE WHEN max(CASE WHEN stage_idx = 1 THEN users END) OVER () > 0
-            THEN round(users / CAST(max(CASE WHEN stage_idx = 1 THEN users END)
-                                    OVER () AS DOUBLE), 4)
-       END AS conversion_pct
-FROM u ORDER BY stage_idx
-"""
+    """`funnel_conversion` under a 7-day attribution window."""
+    return _funnel(t(spark, sf_dir, "events"), window_days=7)
 
 
 def q_retention_cohorts(spark, sf_dir):
@@ -917,8 +875,8 @@ RELATIONAL_QUERIES = {
     "revenue_by_region": (q_revenue_by_region, ORACLE_REVENUE_BY_REGION),
     "tumbling_hourly_events": (q_tumbling_hourly_events, ORACLE_TUMBLING_HOURLY_EVENTS),
     "sessionize_events": (q_sessionize_events, ORACLE_SESSIONIZE_EVENTS),
-    "funnel_conversion": (q_funnel_conversion, ORACLE_FUNNEL_CONVERSION),
-    "funnel_windowed": (q_funnel_windowed, ORACLE_FUNNEL_WINDOWED),
+    "funnel_conversion": (q_funnel_conversion, _funnel_oracle()),
+    "funnel_windowed": (q_funnel_windowed, _funnel_oracle(window_days=7)),
     "retention_cohorts": (q_retention_cohorts, ORACLE_RETENTION_COHORTS),
     "retention_cohorts_incremental": (
         q_retention_cohorts_incremental,

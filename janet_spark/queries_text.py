@@ -109,18 +109,6 @@ FROM documents ORDER BY doc_id
 """
 
 
-def q_clean_canonicalize_jvm(spark, sf_dir):
-    """The SAME canonicalizer rendered as pure Spark SQL (whole-stage
-    codegen, no Python) from the shared rule table — the JVM dialect of T8
-    under the driver gate, against the same DuckDB oracle."""
-    from janet_spark.extract.text_rules import spark_canonicalize_sql
-
-    docs = t(spark, sf_dir, "documents").withColumn("dirty", F.expr(_SPARK_DIRTY))
-    return docs.select(
-        "doc_id", F.expr(spark_canonicalize_sql("dirty")).alias("clean_text")
-    ).orderBy("doc_id")
-
-
 # ---------------------------------------------------------------------------
 # HTML boilerplate strip round-trip
 # ---------------------------------------------------------------------------
@@ -215,25 +203,6 @@ def q_token_counts_bpe(spark, sf_dir):
 
     return docs.mapInPandas(
         run, schema="doc_id long, bpe_tokens long, n_words long"
-    ).orderBy("doc_id")
-
-
-def q_token_counts_bpe_jvm(spark, sf_dir):
-    """The SAME tokenizer rendered as one pure Spark-SQL expression
-    (transform + the 48-replace chain per word + aggregate-sum — JVM
-    whole-stage codegen, zero Python), against the same DuckDB oracle.
-    The JVM/Arrow A/B twin of clean_canonicalize vs clean_canonicalize_jvm."""
-    from janet_spark.extract.bpe import TOKEN_SPLIT, spark_word_token_count_sql
-
-    docs = t(spark, sf_dir, "documents")
-    words = f"filter(split(lower(coalesce(text, '')), '{TOKEN_SPLIT}'), x -> x != '')"
-    chain = spark_word_token_count_sql("w")
-    return docs.select(
-        "doc_id",
-        F.expr(
-            f"aggregate(transform({words}, w -> {chain}), 0L, (acc, x) -> acc + x)"
-        ).alias("bpe_tokens"),
-        F.expr(f"cast(size({words}) AS long)").alias("n_words"),
     ).orderBy("doc_id")
 
 
@@ -808,8 +777,8 @@ _LINE_DUP_DOCS = 2  # a line seen in >= K distinct docs is corpus boilerplate
 def _line_docs(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, line): fixed-width word segments standing in for the
     newline grain. The driver corpus contains no newlines, so the
-    deterministic segmenter is the same {_LINE_WORDS}-word chunking the
-    transcript derivation uses; a production corpus swaps this one
+    deterministic segmenter is the same 16-word (``_LINE_WORDS``) chunking
+    the transcript derivation uses; a production corpus swaps this one
     projection for split(text, '\\n') + posexplode and nothing downstream
     changes. Narrow (explode of a closed-form sequence), no shuffle."""
     wdocs = _word_docs(docs)
@@ -3130,13 +3099,13 @@ def q_doc_fingerprint(spark, sf_dir):
     """Winnowing-style document fingerprint: min md5 over the document's
     word shingles, Arrow-batched with C-speed hashlib over slices of one
     cached word list. Routed Python-side on MEASURED evidence (the same
-    A/B pattern as the canonicalizer and MinHash signatures): the JVM
-    expression variant below allocates a UTF8String per shingle in
+    A/B pattern as the canonicalizer and MinHash signatures): a pure
+    Spark-expression variant allocates a UTF8String per shingle in
     array_join and ran 2.5x slower warm at sf0.1 on 32 cores (1.57 s vs
-    0.63 s, value-identical). Hex md5 min compares identically in both
-    engines (lowercase hex, lexicographic). NULL text propagates to a
-    NULL fingerprint, matching the oracle's string_split(NULL) and the
-    JVM twin's split(NULL) — all three variants NULL-agree."""
+    0.63 s, value-identical; see BENCH/BASELINE.md). Hex md5 min compares
+    identically in both engines (lowercase hex, lexicographic). NULL text
+    propagates to a NULL fingerprint, matching the oracle's
+    string_split(NULL)."""
     import hashlib
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -3167,23 +3136,6 @@ def q_doc_fingerprint(spark, sf_dir):
     return docs.mapInPandas(run, schema="doc_id long, fingerprint string").orderBy(
         "doc_id"
     )
-
-
-def q_doc_fingerprint_jvm(spark, sf_dir):
-    """The SAME fingerprint as one whole-stage-codegen expression (no
-    explode, no Python) — the JVM side of the A/B above, kept registered
-    against the same oracle so the routing decision stays re-measurable."""
-    docs = t(spark, sf_dir, "documents")
-    wdocs = _word_docs(docs, coalesce_null=False)
-    words = F.col("__words")
-    n = F.greatest(F.size(words) - (_SHINGLE_WORDS - 1), F.lit(1))
-    fp = F.array_min(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.md5(F.array_join(F.slice(words, i, _SHINGLE_WORDS), " ")),
-        )
-    )
-    return wdocs.select("doc_id", fp.alias("fingerprint")).orderBy("doc_id")
 
 
 ORACLE_DOC_FINGERPRINT = f"""
@@ -3585,6 +3537,10 @@ def _dsir_ratio_from_counts(counts: DataFrame) -> DataFrame:
 
 
 def _dsir_score(occ: DataFrame, ratio: DataFrame) -> DataFrame:
+    """Per-document DSIR log-importance: the sum of the hashed features'
+    log-ratios. Oracle parity rests on rounding that floating-point sum to
+    4 dp, not on exact arithmetic — Spark and DuckDB add the terms in
+    different orders, so the unrounded sums can differ in the last bits."""
     return (
         occ.join(F.broadcast(ratio), "bucket")
         .groupBy("doc_id", "lang")
@@ -3731,11 +3687,9 @@ TEXT_QUERIES = {
     "extract_turns": (q_extract_turns, ORACLE_EXTRACT_TURNS),
     "reassemble_convs": (q_reassemble_convs, ORACLE_REASSEMBLE_CONVS),
     "clean_canonicalize": (q_clean_canonicalize, ORACLE_CLEAN_CANONICALIZE),
-    "clean_canonicalize_jvm": (q_clean_canonicalize_jvm, ORACLE_CLEAN_CANONICALIZE),
     "html_strip": (q_html_strip, ORACLE_HTML_STRIP),
     "token_counts": (q_token_counts, ORACLE_TOKEN_COUNTS),
     "token_counts_bpe": (q_token_counts_bpe, ORACLE_TOKEN_COUNTS_BPE),
-    "token_counts_bpe_jvm": (q_token_counts_bpe_jvm, ORACLE_TOKEN_COUNTS_BPE),
     "token_counts_bpe_1k": (q_token_counts_bpe_1k, _token_counts_bpe_1k_oracle()),
     "quality_scores": (q_quality_scores, ORACLE_QUALITY_SCORES),
     "quality_repetition": (q_quality_repetition, ORACLE_QUALITY_REPETITION),
@@ -3789,7 +3743,6 @@ TEXT_QUERIES = {
         ORACLE_INCREMENTAL_EMBED_NEARDUP,
     ),
     "doc_fingerprint": (q_doc_fingerprint, ORACLE_DOC_FINGERPRINT),
-    "doc_fingerprint_jvm": (q_doc_fingerprint_jvm, ORACLE_DOC_FINGERPRINT),
     "keyword_match_count": (q_keyword_match_count, ORACLE_KEYWORD_MATCH_COUNT),
     "keyword_spans": (q_keyword_spans, ORACLE_KEYWORD_SPANS),
     "rename_suggest": (q_rename_suggest, ORACLE_RENAME_SUGGEST),

@@ -64,7 +64,6 @@ AUDITED = [
     "search_with_snippets",
     "index_incremental_merge",
     "token_counts_bpe",
-    "token_counts_bpe_jvm",
     # curation suite
     "quality_repetition",
     "chunk_dedup",

@@ -1,5 +1,5 @@
 """End-to-end pipeline tests: golden per-turn text equality under stable
-(conv_id, turn_idx) ordering, reassembly, skew salting, and
+(conv_id, turn_idx) ordering, reassembly, partition-count invariance, and
 kill-and-restart resume (SURVEY.md §5 test plan items b/d/e)."""
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ def fixtures(spark):
 def test_per_turn_text_equality(spark, fixtures):
     tdf, expected = fixtures
     out = (
-        extract_only(tdf, skew_threshold=50, salt_buckets=4, num_partitions=8)
+        extract_only(tdf.repartition(8))
         .select("conv_id", "turn_idx", "extracted_text", "ok", "blocks_kept")
         .toPandas()
         .sort_values(["conv_id", "turn_idx"])
@@ -45,7 +45,7 @@ def test_per_turn_text_equality(spark, fixtures):
 
 def test_reassembly_golden(spark, fixtures):
     tdf, expected = fixtures
-    extracted = extract_only(tdf, skew_threshold=50, salt_buckets=4, num_partitions=8)
+    extracted = extract_only(tdf.repartition(8))
     conv = (
         reassemble_conversations(extracted)
         .select("conv_id", "conv_text")
@@ -57,35 +57,26 @@ def test_reassembly_golden(spark, fixtures):
     assert conv["conv_text"].tolist() == golden["conv_text"].tolist()
 
 
-def test_salting_does_not_change_results(spark, fixtures):
+def test_partition_count_does_not_change_results(spark, fixtures):
     tdf, _ = fixtures
-    a = (
-        extract_only(
-            tdf,
-            skew_threshold=10,
-            salt_buckets=8,
-            num_partitions=16,
-            detect_skew=True,
-            pre_partition=True,
+
+    def run(n):
+        return (
+            extract_only(tdf.repartition(n))
+            .select(
+                "conv_id", "turn_idx", "extracted_text", F.to_json("spans"), "ok"
+            )
+            .toPandas()
+            .sort_values(["conv_id", "turn_idx"])
+            .reset_index(drop=True)
         )
-        .select("conv_id", "turn_idx", "extracted_text")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    b = (
-        extract_only(tdf, skew_threshold=10**9, salt_buckets=1, num_partitions=2)
-        .select("conv_id", "turn_idx", "extracted_text")
-        .toPandas()
-        .sort_values(["conv_id", "turn_idx"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+
+    pd.testing.assert_frame_equal(run(2), run(16))
 
 
 def test_spans_point_into_original_payload(spark, fixtures):
     tdf, _ = fixtures
-    out = extract_only(tdf, num_partitions=4).alias("o")
+    out = extract_only(tdf.repartition(4)).alias("o")
     joined = (
         out.join(tdf.alias("t"), ["conv_id", "turn_idx"])
         .select("conv_id", "turn_idx", "o.extracted_text", "o.spans", "t.text", "t.tool")
@@ -141,7 +132,7 @@ def test_resume_after_injected_failure(spark, fixtures, tmp_path):
 
 def test_failed_rows_flagged_not_dropped(spark, fixtures):
     tdf, expected = fixtures
-    out = extract_only(tdf, num_partitions=4)
+    out = extract_only(tdf.repartition(4))
     n_failed = out.filter(~F.col("ok")).count()
     assert n_failed == int((~expected["ok"]).sum())
     assert n_failed > 0
@@ -151,7 +142,7 @@ def test_two_level_reassembly_multi_chunk(spark, fixtures):
     """The chunked reassembly must produce byte-identical conv_text when a
     conversation spans many level-1 chunks (chunk << n_turns) vs one chunk."""
     tdf, expected = fixtures
-    extracted = extract_only(tdf, num_partitions=8)
+    extracted = extract_only(tdf.repartition(8))
     small = (
         reassemble_conversations(extracted, chunk=7)
         .select("conv_id", "conv_text", "n_turns", "all_ok")
@@ -173,44 +164,6 @@ def test_two_level_reassembly_multi_chunk(spark, fixtures):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(small, one)
-
-
-def test_jvm_fast_path_identical_to_udf_path(spark, fixtures):
-    """The whole-stage-codegen plain branch must be byte-identical to the
-    pandas UDF across every archetype (incl. exotic-whitespace routing)."""
-    tdf, _ = fixtures
-    ts = pd.Timestamp("2024-01-01")
-    extra = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                ("x", 0, "user", "\u00a0 padded nbsp \u00a0 ", "", ts),
-                ("x", 1, "user", "plain ok", "", ts),
-                ("x", 2, "user", "\u001cfs\u001d gs\u001f edges\u2028", "", ts),
-                ("x", 3, "user", "tab\tand \ufb01 ligature", "", ts),
-                ("x", 4, "user", "ideographic\u3000space", "", ts),
-            ],
-            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
-        ),
-        schema=TRANSCRIPT_SCHEMA,
-    )
-    src = tdf.unionByName(extra)
-    cols = ["conv_id", "turn_idx", "extracted_text", "spans", "blocks_kept", "ok"]
-    fast = (
-        extract_only(src, jvm_fast_path=True)
-        .select(cols).toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
-    slow = (
-        extract_only(src, jvm_fast_path=False)
-        .select(cols).toPandas()
-        .sort_values(["conv_id", "turn_idx"]).reset_index(drop=True)
-    )
-    assert fast["extracted_text"].tolist() == slow["extracted_text"].tolist()
-    assert [list(map(tuple, s)) for s in fast["spans"]] == [
-        list(map(tuple, s)) for s in slow["spans"]
-    ]
-    assert fast["ok"].tolist() == slow["ok"].tolist()
-    assert fast["blocks_kept"].tolist() == slow["blocks_kept"].tolist()
 
 
 def test_skewed_conversation_end_to_end(spark, tmp_path):

@@ -33,7 +33,7 @@ def test_unicode_roundtrip(spark):
         ("u", 3, "user", "  mixed ＡＳＣＩＩ + русский  ", "", ts),
     ]
     out = (
-        extract_only(_df(spark, rows), num_partitions=2)
+        extract_only(_df(spark, rows).repartition(2))
         .orderBy("turn_idx")
         .toPandas()
     )
@@ -49,7 +49,7 @@ def test_unicode_roundtrip(spark):
         for sp in r["spans"]:
             assert src[sp["start"] : sp["end"]].strip() == r["extracted_text"]
     conv = reassemble_conversations(
-        extract_only(_df(spark, rows), num_partitions=2)
+        extract_only(_df(spark, rows).repartition(2))
     ).collect()[0]
     assert conv["conv_text"].count("\n") == 3
     assert "🙂🚀" in conv["conv_text"]
@@ -63,7 +63,7 @@ def test_null_columns_no_row_loss(spark):
         ("n", 2, None, "plain text", None, None),  # null role + ts
     ]
     out = (
-        extract_only(_df(spark, rows), num_partitions=2)
+        extract_only(_df(spark, rows).repartition(2))
         .orderBy("turn_idx")
         .toPandas()
     )
@@ -72,7 +72,7 @@ def test_null_columns_no_row_loss(spark):
     assert out.loc[1, "extracted_text"] == "from tool"
     assert out.loc[2, "extracted_text"] == "plain text"
     conv = reassemble_conversations(
-        extract_only(_df(spark, rows), num_partitions=2)
+        extract_only(_df(spark, rows).repartition(2))
     ).collect()[0]
     assert conv["n_turns"] == 3
     assert conv["all_ok"] == 0

@@ -76,16 +76,6 @@ def test_bpe_single_pass_replace_semantics():
     assert len(MERGES) == len(set(MERGES))
 
 
-def test_bpe_jvm_matches_python(spark):
-    from janet_spark.queries_text import q_token_counts_bpe, q_token_counts_bpe_jvm
-
-    py = {r["doc_id"]: (r["bpe_tokens"], r["n_words"])
-          for r in q_token_counts_bpe(spark, SF).collect()}
-    jvm = {r["doc_id"]: (r["bpe_tokens"], r["n_words"])
-           for r in q_token_counts_bpe_jvm(spark, SF).collect()}
-    assert py == jvm and len(py) > 0
-
-
 # ---------------------------------------------------------------------------
 # ranked + fuzzy search
 # ---------------------------------------------------------------------------
@@ -501,18 +491,14 @@ def test_sequence_pack_block_invariance(spark):
 
 
 def test_doc_fingerprint_variants_null_agree(spark, tmp_path):
-    """NULL text must produce a NULL fingerprint in BOTH engine variants
-    and the DuckDB oracle (string_split(NULL) -> NULL) — the Python
-    rewrite initially coalesced NULL to '' and silently diverged from its
-    own oracle; pinned here with an actual NULL row."""
+    """NULL text must produce a NULL fingerprint in both the engine and
+    the DuckDB oracle (string_split(NULL) -> NULL) — the Python rewrite
+    initially coalesced NULL to '' and silently diverged from its own
+    oracle; pinned here with an actual NULL row."""
     import duckdb
     import pandas as pd
 
-    from janet_spark.queries_text import (
-        ORACLE_DOC_FINGERPRINT,
-        q_doc_fingerprint,
-        q_doc_fingerprint_jvm,
-    )
+    from janet_spark.queries_text import ORACLE_DOC_FINGERPRINT, q_doc_fingerprint
 
     pdf = pd.DataFrame(
         {
@@ -527,8 +513,6 @@ def test_doc_fingerprint_variants_null_agree(spark, tmp_path):
     spark.createDataFrame(pdf).write.parquet(f"{sf}/documents.parquet")
 
     py = {r["doc_id"]: r["fingerprint"] for r in q_doc_fingerprint(spark, sf).collect()}
-    jvm = {r["doc_id"]: r["fingerprint"] for r in q_doc_fingerprint_jvm(spark, sf).collect()}
-    assert py == jvm
     assert py[1] is None  # NULL propagates
     assert py[0] is not None and py[2] is not None
 

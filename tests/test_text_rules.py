@@ -142,26 +142,6 @@ def test_extract_metadata():
     assert md["monetaryAmounts"] == ["$1,234.56", "$12.00"]
 
 
-def test_spark_sql_dialect_matches_python(spark):
-    """The Spark-SQL rendering of the canonicalizer rule table (the JVM
-    fast path) must match the pure-Python scalar on dirty samples."""
-    import pandas as pd
-    from janet_spark.extract.text_rules import canonicalize_str, spark_canonicalize_sql
-    from pyspark.sql import functions as F
-
-    samples = [
-        "a-\nb", "\r\nx y\tz", "\ufb03\ufb04\ufb05\ufb06 \ufb01\ufb02\ufb00", "", "  \n  ", "a  b",
-        "x \n y\n\n\n\nz", "can-\ncelled \ufb01nancial", " trailing \t ",
-        "no change needed", "-\n", "A-\nB-\nC", "dots . and 'quotes'",
-    ]
-    df = spark.createDataFrame(pd.DataFrame({"t": samples}))
-    got = [
-        r[0]
-        for r in df.select(F.expr(spark_canonicalize_sql("t"))).collect()
-    ]
-    assert got == [canonicalize_str(s) for s in samples]
-
-
 def test_text_after_closing_boilerplate_is_body_content():
     # regression: the fresh block created when </nav> closes must NOT
     # inherit the boilerplate flag — bare text after a closing nav/footer
