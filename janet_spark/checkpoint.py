@@ -8,9 +8,9 @@ Mirrors the reference's resumability model, translated to Spark:
 * resume = anti-join of the input against successful lineage
   (``apps/legacy/rename.ts:61-64`` keeps only files without a successful
   mapping),
-* two-phase commit: data lands in a staging dir, then moves bucket-by-bucket
-  into the final layout and the bucket's lineage row is appended
-  immediately after its move (``rename.ts:29-34`` temp-then-rename),
+* two-phase commit: data lands in a staging dir, then each bucket is
+  published into the final layout by ``commit.publish`` and its lineage
+  row is appended immediately after (``rename.ts:29-34``),
 * manifest backup before mutation (``rename.ts:6-16``) → a timestamped
   manifest JSON per run.
 
@@ -33,6 +33,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from janet_spark.commit import publish
 
 LINEAGE_SCHEMA = (
     "run_id string, part_bucket int, status string, error string, "
@@ -115,22 +117,6 @@ def check_bucket_config(output_path: str, n_buckets: int) -> None:
         json.dump({"n_buckets": n_buckets}, f)
 
 
-def clean_stale_staging(output_path: str, current_run_id: str) -> list[str]:
-    """Remove `_staging_*` dirs left by crashed runs. Runs are single-
-    writer (the reference's batch model), so any staging dir not owned by
-    the CURRENT run is a dead remnant — without this, every crash-resume
-    cycle would leave a full copy of its uncommitted buckets on disk."""
-    removed = []
-    if not os.path.isdir(output_path):
-        return removed
-    keep = f"_staging_{current_run_id}"
-    for name in os.listdir(output_path):
-        if name.startswith("_staging_") and name != keep:
-            shutil.rmtree(os.path.join(output_path, name), ignore_errors=True)
-            removed.append(name)
-    return removed
-
-
 def backup_manifest(output_path: str, run_id: str, payload: dict) -> str:
     """Timestamped manifest write (K3; reference timestamps with
     toISOString().replace(/[:.]/g,'-'), rename.ts:7)."""
@@ -190,8 +176,8 @@ def commit_staged(
     bucket_stats: dict[int, dict],
     fail_after_n_buckets: int | None = None,
 ) -> list[int]:
-    """Two-phase commit: move each staged bucket dir into the final data
-    layout, appending that bucket's lineage row immediately after the move.
+    """Two-phase commit: publish each staged bucket dir into the final data
+    layout, appending that bucket's lineage row immediately after.
 
     `fail_after_n_buckets` injects a crash after that many buckets have
     committed (the pytest kill-and-restart scenario). Returns committed
@@ -204,11 +190,7 @@ def commit_staged(
         if not name.startswith("part_bucket="):
             continue
         bucket = int(name.split("=", 1)[1])
-        src = os.path.join(staging_path, name)
-        dst = os.path.join(ddir, name)
-        if os.path.exists(dst):
-            shutil.rmtree(dst)  # idempotent re-commit of an uncheckpointed bucket
-        shutil.move(src, dst)
+        publish(os.path.join(staging_path, name), os.path.join(ddir, name))
         stats = bucket_stats.get(bucket, {})
         write_lineage(
             output_path,

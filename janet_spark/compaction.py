@@ -8,19 +8,17 @@ scan throughput (one task per tiny file, footer overhead, NN pressure)
 and is the canonical "small files problem". `compact_dir` rewrites a
 partition directory into ~target-sized files using the same two-phase
 contract as the data path: write compacted output to a staging dir,
-verify row count, then swap. A crash anywhere before the swap leaves the
-original untouched; a crash INSIDE the two-rename swap leaves the
-original intact under the backup name, and the next invocation restores
-it before doing anything else (see the recovery block). Staging/backup
-names are _-prefixed so Spark's file index never discovers them as bogus
-partitions of the parent table.
+verify row count, then `commit.publish` it over the original. Spark
+skips a `_` name only when it has no `=`, so staging and the aside copy
+use `commit`'s names: a crash never exposes them to a read of the parent
+table, and `commit.recover` (run by the next compaction) puts back a leaf
+that a crash left aside.
 
 Sizing: the file count is computed from the directory's actual on-disk
 bytes divided by the target file size (parquet-encoded bytes, so the
 output files land near the target without sampling row widths). The
 rewrite uses `coalesce` (narrow — no shuffle: compaction must not pay a
-cluster-wide shuffle just to merge files) unless `shuffle=True` is
-requested for rebalancing skewed file sizes.
+cluster-wide shuffle just to merge files).
 
 On an Iceberg deployment this module collapses to
 `rewrite_data_files`; the filesystem implementation keeps the same
@@ -30,9 +28,10 @@ verify-then-swap ordering.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import SparkSession
+
+from janet_spark import commit
 
 DEFAULT_TARGET_FILE_MB = 128
 
@@ -52,15 +51,18 @@ def compact_dir(
     spark: SparkSession,
     path: str,
     target_file_mb: int = DEFAULT_TARGET_FILE_MB,
-    shuffle: bool = False,
 ) -> dict:
     """Rewrite the parquet files under `path` into ~target_file_mb files.
 
-    Two-phase: staging write -> row-count verify -> swap. Returns a
+    Two-phase: staging write -> row-count verify -> publish. Returns a
     summary dict; raises (leaving the original intact) if the verify
     fails. No-op (returns early) when the directory already has one file
     or is already at/under the target count.
     """
+    # finish a swap that a crashed earlier attempt left half done
+    parent = os.path.dirname(os.path.abspath(path))
+    commit.recover(parent)
+
     # guard: compacting a partitioned ROOT would read the partition column
     # out of the directory names and write it back flat, destroying the
     # layout — each leaf partition directory must be compacted on its own
@@ -70,23 +72,6 @@ def compact_dir(
                 f"{path} contains partition subdirectories ({entry}); "
                 "compact each leaf partition directory individually"
             )
-
-    # staging/backup live as SIBLINGS with a leading-underscore name:
-    # Spark's file index ignores _-prefixed entries, so a crash mid-
-    # compaction cannot leak half-written or duplicate data into parent-
-    # table partition discovery (a name like 'day=1__compacting' WOULD be
-    # discovered as a bogus partition value).
-    parent, leaf = os.path.split(os.path.abspath(path))
-    staging = os.path.join(parent, f"_compact_tmp_{leaf}")
-    backup = os.path.join(parent, f"_compact_bak_{leaf}")
-
-    # crash recovery from a previous attempt: if the swap was interrupted
-    # between the two renames, the original lives at `backup` and `path`
-    # is missing — restore it; stale staging/backup leftovers are removed
-    if os.path.isdir(backup) and not os.path.isdir(path):
-        os.rename(backup, path)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
 
     n_files, total_bytes = dir_parquet_stats(path)
     target_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
@@ -100,18 +85,14 @@ def compact_dir(
 
     df = spark.read.parquet(path)
     n_rows = df.count()
-    out = df.repartition(target_files) if shuffle else df.coalesce(target_files)
-    out.write.mode("overwrite").parquet(staging)
-
-    staged_rows = spark.read.parquet(staging).count()
-    if staged_rows != n_rows:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise RuntimeError(
-            f"compaction verify failed: {staged_rows} staged rows != {n_rows}"
-        )
-    os.rename(path, backup)
-    os.rename(staging, path)
-    shutil.rmtree(backup)
+    with commit.staged(parent, "compact") as staging:
+        df.coalesce(target_files).write.mode("overwrite").parquet(staging)
+        staged_rows = spark.read.parquet(staging).count()
+        if staged_rows != n_rows:
+            raise RuntimeError(
+                f"compaction verify failed: {staged_rows} staged rows != {n_rows}"
+            )
+        commit.publish(staging, path)
     new_files, new_bytes = dir_parquet_stats(path)
     return {
         "path": path,

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from janet_spark import checkpoint as ckpt
+from janet_spark import commit
 from janet_spark.extract.udfs import EXTRACT_OUTPUT_DDL, extract_turns_iter
 from janet_spark.reassemble import reassemble_conversations
 
@@ -71,7 +72,7 @@ def run_job(
     # refuse to resume with a different bucketing (wrong-space anti-join),
     # and clear staging remnants from crashed prior runs
     ckpt.check_bucket_config(output_path, n_buckets)
-    ckpt.clean_stale_staging(output_path, run_id)
+    commit.sweep_staging(output_path, keep=run_id)
 
     work = transcripts.withColumn(
         "part_bucket", ckpt.partition_bucket("conv_id", n_buckets)
@@ -128,7 +129,7 @@ def run_job(
             ).alias(f"o{b}")
         )
 
-    staging = f"{output_path}/_staging_{run_id}"
+    staging = commit.staging_path(output_path, run_id)
     to_write = extracted if speculative else extracted.observe(obs, *metric_exprs)
     (
         to_write

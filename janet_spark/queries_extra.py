@@ -1565,19 +1565,16 @@ def q_ann_ivf_topk_indexed(spark, sf_dir):
     (same oracle)."""
     import os
 
-    from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
-        _write_generation,
-        state_dir_for_input,
-    )
+    from janet_spark.commit import live_generation_dirs, write_generation
+    from janet_spark.dedup_incremental import state_dir_for_input
 
     emb = t(spark, sf_dir, "embeddings")
     cent = ivf_centroids(emb)
     idx_path = state_dir_for_input(sf_dir, "embeddings.parquet", "ivf_index")
-    if not _live_generation_dirs(idx_path):
-        _write_generation(ivf_assign_frame(emb, cent), idx_path, "bootstrap")
+    if not live_generation_dirs(idx_path):
+        write_generation(ivf_assign_frame(emb, cent), idx_path, "bootstrap")
     assigned = spark.read.schema(IVF_INDEX_SCHEMA).parquet(
-        *_live_generation_dirs(idx_path)
+        *live_generation_dirs(idx_path)
     )
     return _ivf_search(emb, assigned, cent)
 
@@ -1617,9 +1614,9 @@ def incremental_ivf_index_run(emb_delta, cent, idx_path: str, run_id: str) -> st
     Generations are disjoint by construction (each run assigns a distinct
     delta), so `compact_generations(..., IVF_INDEX_SCHEMA)` applies
     unchanged when the per-day dirs accumulate."""
-    from janet_spark.dedup_incremental import _write_generation
+    from janet_spark.commit import write_generation
 
-    return _write_generation(ivf_assign_frame(emb_delta, cent), idx_path, run_id)
+    return write_generation(ivf_assign_frame(emb_delta, cent), idx_path, run_id)
 
 
 def q_ann_ivf_topk_indexed_delta(spark, sf_dir):
@@ -1634,23 +1631,21 @@ def q_ann_ivf_topk_indexed_delta(spark, sf_dir):
     semantics (NOT full-corpus retraining) is what gets value-checked."""
     import os
 
-    from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
-        state_dir_for_input,
-    )
+    from janet_spark.commit import live_generation_dirs
+    from janet_spark.dedup_incremental import state_dir_for_input
 
     emb = t(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % _IVF_DELTA_MOD == 0
     old = emb.filter(~is_new)
     cent = ivf_centroids(old)  # trained at bootstrap, held fixed
     idx_path = state_dir_for_input(sf_dir, "embeddings.parquet", "ivf_index_delta")
-    live = {os.path.basename(d) for d in _live_generation_dirs(idx_path)}
+    live = {os.path.basename(d) for d in live_generation_dirs(idx_path)}
     if "gen=bootstrap" not in live:
         incremental_ivf_index_run(old, cent, idx_path, "bootstrap")
     if "gen=delta-day2" not in live:
         incremental_ivf_index_run(emb.filter(is_new), cent, idx_path, "delta-day2")
     assigned = spark.read.schema(IVF_INDEX_SCHEMA).parquet(
-        *_live_generation_dirs(idx_path)
+        *live_generation_dirs(idx_path)
     )
     return _ivf_search(emb, assigned, cent)
 

@@ -623,20 +623,20 @@ def incremental_retention_run(
     events, including replayed/overlapping deltas) and activity is
     union-DISTINCT — so this run is replay-tolerant like the HLL
     registers, unlike the sum-merge censuses."""
-    from janet_spark.dedup_incremental import _write_generation
+    from janet_spark.commit import write_generation
 
     first, activity = _retention_week_frames(delta_events)
-    _write_generation(first, first_path, run_id)
-    _write_generation(activity, activity_path, run_id)
+    write_generation(first, first_path, run_id)
+    write_generation(activity, activity_path, run_id)
 
 
 def read_retention_state(spark, first_path: str, activity_path: str):
     """(first, activity) live tables merged from committed generations,
     or (None, None) when either table has no generation yet."""
-    from janet_spark.dedup_incremental import _live_generation_dirs
+    from janet_spark.commit import live_generation_dirs
 
-    fg = _live_generation_dirs(first_path)
-    ag = _live_generation_dirs(activity_path)
+    fg = live_generation_dirs(first_path)
+    ag = live_generation_dirs(activity_path)
     if not fg or not ag:
         return None, None
     first = (
@@ -659,23 +659,21 @@ def _maintained_retention(spark, sf_dir):
     maintained constructors."""
     import os
 
-    from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
-        state_dir_for_input,
-    )
+    from janet_spark.commit import live_generation_dirs
+    from janet_spark.dedup_incremental import state_dir_for_input
 
     first_path = state_dir_for_input(sf_dir, "events.parquet", "retention_first")
     activity_path = state_dir_for_input(
         sf_dir, "events.parquet", "retention_activity"
     )
-    live_f = {os.path.basename(d) for d in _live_generation_dirs(first_path)}
-    live_a = {os.path.basename(d) for d in _live_generation_dirs(activity_path)}
+    live_f = {os.path.basename(d) for d in live_generation_dirs(first_path)}
+    live_a = {os.path.basename(d) for d in live_generation_dirs(activity_path)}
     # the pure-bootstrap gate looks at the UNION of both tables' names —
     # after a compaction the per-table compacted-<id> names never match,
     # so an intersection would read two compacted tables as empty state
     # and re-bootstrap; presence of a half requires it in BOTH tables
     # (a crash between the two table writes of one run re-commits it,
-    # which _write_generation replaces idempotently)
+    # which write_generation replaces idempotently)
     if (live_f | live_a) <= {"gen=bootstrap", "gen=delta-day2"}:
         both = live_f & live_a
         events = t(spark, sf_dir, "events")

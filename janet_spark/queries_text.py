@@ -2603,18 +2603,13 @@ def _maintained_pairs(spark, sf_dir):
     the steady state a daily report actually runs in — only READS the
     pair table, whose size scales with the duplicate population, not the
     corpus."""
-    from janet_spark.dedup_incremental import (
-        read_pairs_table,
-        state_dir_for_input,
-        write_pairs_generation,
-    )
+    from janet_spark.commit import write_generation
+    from janet_spark.dedup_incremental import read_pairs_table, state_dir_for_input
 
     pairs_path = state_dir_for_input(sf_dir, "documents.parquet", "pairs")
     pairs = read_pairs_table(spark, pairs_path)
     if pairs is None:
-        write_pairs_generation(
-            q_minhash_lsh_pairs(spark, sf_dir), pairs_path, "bootstrap"
-        )
+        write_generation(q_minhash_lsh_pairs(spark, sf_dir), pairs_path, "bootstrap")
         pairs = read_pairs_table(spark, pairs_path)
     return pairs
 
@@ -3567,8 +3562,8 @@ def _maintained_dsir_counts(spark, sf_dir) -> DataFrame:
     never re-featurizes the corpus."""
     import os
 
+    from janet_spark.commit import live_generation_dirs
     from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
         incremental_dsir_counts_run,
         read_dsir_counts,
         state_dir_for_input,
@@ -3581,7 +3576,7 @@ def _maintained_dsir_counts(spark, sf_dir) -> DataFrame:
     # But backfill ONLY while the state is pure-bootstrap-shaped: after a
     # compaction the halves live under gen=compacted-* and re-writing
     # them would double the sum-merged counts.
-    live = {os.path.basename(d) for d in _live_generation_dirs(counts_path)}
+    live = {os.path.basename(d) for d in live_generation_dirs(counts_path)}
     if live <= {"gen=bootstrap", "gen=delta-day2"}:
         docs = t(spark, sf_dir, "documents")
         if "gen=bootstrap" not in live:

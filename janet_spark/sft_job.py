@@ -17,22 +17,19 @@ generation:
     <output>/_lineage/                one success row per committed
                                       generation (records the gen dir)
 
-Commit protocol (same discipline as checkpoint.py / dedup_incremental.py,
-mirroring the reference's temp-then-rename two-phase write,
-apps/legacy/rename.ts:29-34): all three tables stage together under
-``_staging_<run_id>/`` and the WHOLE generation commits with ONE
-``os.rename`` to ``gen=<run_id>/`` — there is no state where tables from
-two generations are visible at once (per-table moves had exactly that
-crash window: seqs moved, loss_mask not, old lineage row still standing,
-so loss-mask spans could point into a different packing). The lineage row
-is appended after the rename; a crash in between leaves an orphan gen dir
-with no lineage row, which the next run deletes before building (the
-committed view never includes it — ``committed_generation`` only trusts
-lineage rows whose gen dir exists). Readers resolve tables through
-``table_path``. Resume mirrors the reference's "PDF text already exists"
-idempotence guard (apps/ocr/src/lib/ocr-utils.ts:376-378): a rerun that
-finds a committed generation short-circuits without touching Spark —
-pass ``force=True`` to rebuild.
+Commit protocol: all three tables stage together and the WHOLE
+generation is published as ``gen=<run_id>/`` by ONE ``commit.publish`` —
+there is no state where tables from two generations are visible at once
+(per-table publishes would let loss-mask spans point into a different
+packing). The lineage row is appended after the publish; a crash in
+between leaves an orphan gen dir with no lineage row, which the next run
+deletes before building (the committed view never includes it —
+``committed_generation`` only trusts lineage rows whose gen dir exists).
+Readers resolve tables through ``table_path``. Resume mirrors the
+reference's "PDF text already exists" idempotence guard
+(apps/ocr/src/lib/ocr-utils.ts:376-378): a rerun that finds a committed
+generation short-circuits without touching Spark — pass ``force=True`` to
+rebuild.
 
 Scale notes: all three tables come out of plans audited in PLANS.md —
 the pipeline's narrow (conv_id, turn_idx, words) persist, conv_id-keyed
@@ -51,6 +48,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 
+from janet_spark import commit
 from janet_spark.checkpoint import new_run_id
 
 _TABLES = ("seqs", "loss_mask", "render")
@@ -93,10 +91,11 @@ def table_path(output_path: str, name: str) -> str:
     return os.path.join(_gen_dir(output_path, gen["run_id"]), name)
 
 
-def _clean_uncommitted(output_path: str) -> None:
-    """Delete staging debris and orphan gen dirs (renamed but crashed
+def _clean_uncommitted(output_path: str, run_id: str) -> None:
+    """Delete staging debris and orphan gen dirs (published but crashed
     before the lineage append). Committed generations always have a
     lineage row, so everything removed here was never visible."""
+    commit.sweep_staging(output_path, keep=run_id)
     if not os.path.isdir(output_path):
         return
     committed = set()
@@ -108,11 +107,8 @@ def _clean_uncommitted(output_path: str) -> None:
                 if row.get("status") == "success":
                     committed.add(row["run_id"])
     for name in os.listdir(output_path):
-        full = os.path.join(output_path, name)
-        if name.startswith("_staging_"):
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith("gen=") and name[len("gen="):] not in committed:
-            shutil.rmtree(full, ignore_errors=True)
+        if name.startswith("gen=") and name[len("gen="):] not in committed:
+            shutil.rmtree(os.path.join(output_path, name), ignore_errors=True)
 
 
 def run_sft_job(
@@ -128,7 +124,7 @@ def run_sft_job(
     summary dict; ``resumed=True`` means a committed generation already
     existed and nothing ran. ``fail_after_n_tables`` /
     ``fail_before_lineage`` inject crashes for the commit-protocol pytest
-    (mid-staging, and between the rename and the lineage append)."""
+    (mid-staging, and between the publish and the lineage append)."""
     from janet_spark.conversations import (
         conv_loss_mask_frame,
         conv_training_pipeline_frame,
@@ -146,8 +142,8 @@ def run_sft_job(
         }
 
     run_id = run_id or new_run_id()
-    _clean_uncommitted(output_path)
-    staging = os.path.join(output_path, f"_staging_{run_id}")
+    _clean_uncommitted(output_path, run_id)
+    staging = commit.staging_path(output_path, run_id)
     os.makedirs(staging, exist_ok=True)
     started = datetime.now(timezone.utc).isoformat()
     t0 = time.time()
@@ -183,19 +179,13 @@ def run_sft_job(
         # metadata-only count over what was actually written
         counts[name] = spark.read.parquet(path).count()
 
-    # all three staged -> ONE rename commits the whole generation, then
-    # the lineage row lands last. Tables from two generations are never
-    # visible together: readers go through table_path, which resolves the
-    # latest lineage row's gen dir. A crash before the rename leaves only
-    # staging debris; between the rename and the append, an orphan gen dir
-    # with no lineage row — both invisible, both removed by the next run's
-    # _clean_uncommitted.
-    gen_dir = _gen_dir(output_path, run_id)
-    if os.path.exists(gen_dir):
-        shutil.rmtree(gen_dir)
-    os.rename(staging, gen_dir)
+    # all three staged -> ONE publish commits the whole generation, then
+    # the lineage row lands last. Readers go through table_path, which
+    # resolves the latest lineage row's gen dir, so a crash before the
+    # append leaves only invisible debris for the next _clean_uncommitted.
+    commit.publish(staging, _gen_dir(output_path, run_id))
     if fail_before_lineage:
-        raise RuntimeError("injected failure between rename and lineage append")
+        raise RuntimeError("injected failure between publish and lineage append")
 
     row = {
         "run_id": run_id,

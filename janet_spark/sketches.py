@@ -377,9 +377,9 @@ def incremental_hll_run(
     committed register generation (the additive-generation contract of
     the censuses, but with max-merge instead of sum-merge on read). The
     per-day write is <= m * groups rows however large the delta."""
-    from janet_spark.dedup_incremental import _write_generation
+    from janet_spark.commit import write_generation
 
-    return _write_generation(
+    return write_generation(
         hll_registers_frame(delta_docs, key, group), reg_path, run_id
     )
 
@@ -391,9 +391,9 @@ def read_hll_registers(spark: SparkSession, reg_path: str) -> DataFrame | None:
     including replayed or overlapping deltas -- merges to exactly the
     full-corpus register table (strictly stronger than the sum-merge
     censuses, which need disjoint deltas)."""
-    from janet_spark.dedup_incremental import _live_generation_dirs
+    from janet_spark.commit import live_generation_dirs
 
-    gens = _live_generation_dirs(reg_path)
+    gens = live_generation_dirs(reg_path)
     if not gens:
         return None
     return (
@@ -412,13 +412,11 @@ def _maintained_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-heals instead of reading a half-corpus sketch as complete."""
     import os
 
-    from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
-        state_dir_for_input,
-    )
+    from janet_spark.commit import live_generation_dirs
+    from janet_spark.dedup_incremental import state_dir_for_input
 
     reg_path = state_dir_for_input(sf_dir, "documents.parquet", "hll_registers")
-    live = {os.path.basename(d) for d in _live_generation_dirs(reg_path)}
+    live = {os.path.basename(d) for d in live_generation_dirs(reg_path)}
     # backfill ONLY while the state is still pure-bootstrap-shaped: once a
     # generation with any other name exists (a compaction or a production
     # run), the bootstrap halves may have been absorbed under a new name
@@ -571,18 +569,18 @@ def incremental_hist_run(
     however large the delta. Contract: deltas must be DISJOINT (each event
     counted in exactly one generation) — counts sum-merge on read, like
     the censuses and unlike the replay-tolerant max-merge HLL registers."""
-    from janet_spark.dedup_incremental import _write_generation
+    from janet_spark.commit import write_generation
 
-    return _write_generation(
+    return write_generation(
         hist_counts_frame(delta_events, value, group), hist_path, run_id
     )
 
 
 def read_hist_counts(spark: SparkSession, hist_path: str) -> DataFrame | None:
     """Sum-merge committed histogram generations into the live table."""
-    from janet_spark.dedup_incremental import _live_generation_dirs
+    from janet_spark.commit import live_generation_dirs
 
-    gens = _live_generation_dirs(hist_path)
+    gens = live_generation_dirs(hist_path)
     if not gens:
         return None
     return (
@@ -601,13 +599,11 @@ def _maintained_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     commits self-heals; see _maintained_hll_registers)."""
     import os
 
-    from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
-        state_dir_for_input,
-    )
+    from janet_spark.commit import live_generation_dirs
+    from janet_spark.dedup_incremental import state_dir_for_input
 
     hist_path = state_dir_for_input(sf_dir, "events.parquet", "quantile_hist")
-    live = {os.path.basename(d) for d in _live_generation_dirs(hist_path)}
+    live = {os.path.basename(d) for d in live_generation_dirs(hist_path)}
     # backfill only while pure-bootstrap-shaped: after a compaction the
     # halves live under gen=compacted-* and re-writing them would DOUBLE
     # the sum-merged counts (see _maintained_hll_registers)

@@ -111,18 +111,17 @@ def write_table(
     network — so its correctness contract is the documented DSv2 API).
 
     Fallback (no catalog): the same dynamic overwrite emulated on plain
-    parquet — partitionBy write into a run-private staging dir, then one
-    atomic rename PER PARTITION into the final layout. Idempotent (an
-    existing partition dir is replaced whole); a crash mid-commit leaves
-    every partition either fully old or fully new, never mixed — the
-    same per-bucket contract `checkpoint.commit_staged` pins with
-    kill-and-restart tests. The emulation supports at most ONE partition
-    column (a top-level dir rename per leaf; deeper specs would need a
-    leaf walk Iceberg does natively) and, unpartitioned, degrades to the
-    two-rename whole-table swap with the stale-`__old` sweep."""
+    parquet — partitionBy write into a private staging dir beside the
+    table, then one `commit.publish` PER PARTITION into the final layout
+    (unpartitioned: one for the whole table). Idempotent (an existing
+    partition dir is replaced whole); after a crash mid-commit and
+    `commit.recover`, every partition is either fully old or fully new.
+    The emulation supports at most ONE partition column (one publish per
+    top-level leaf; deeper specs would need a leaf walk Iceberg does
+    natively)."""
     import os
-    import shutil
-    import uuid
+
+    from janet_spark import commit
 
     if len(partition_by) > 1:
         raise ValueError(
@@ -143,35 +142,20 @@ def write_table(
             w.create()
         return "iceberg"
 
-    staging = f"{path_or_ident}__staging_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(staging)
-    if partition_by:
-        os.makedirs(path_or_ident, exist_ok=True)
-        prefix = f"{partition_by[0]}="
-        for name in sorted(os.listdir(staging)):
-            if not name.startswith(prefix):
-                continue  # _SUCCESS / .crc markers stay behind
-            dst = os.path.join(path_or_ident, name)
-            if os.path.exists(dst):
-                shutil.rmtree(dst)
-            shutil.move(os.path.join(staging, name), dst)
-        shutil.rmtree(staging, ignore_errors=True)
-    else:
-        old = path_or_ident + "__old"
-        if not os.path.isdir(path_or_ident) and os.path.isdir(old):
-            # recover a stranded swap: a prior writer crashed between
-            # rename(table, __old) and rename(staging, table), leaving the
-            # sole surviving copy at __old with the table path empty.
-            # Restore it BEFORE the rmtree below, which would otherwise
-            # delete that only copy (same crash-window contract as
-            # streaming.update_index_stream)
-            os.rename(old, path_or_ident)
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.isdir(path_or_ident):
-            os.rename(path_or_ident, old)
-        os.rename(staging, path_or_ident)
-        shutil.rmtree(old, ignore_errors=True)
+    parent = os.path.dirname(os.path.abspath(path_or_ident))
+    with commit.staged(parent, "table") as staging:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        if not partition_by:
+            commit.publish(staging, path_or_ident)
+        else:
+            os.makedirs(path_or_ident, exist_ok=True)
+            prefix = f"{partition_by[0]}="
+            for name in sorted(os.listdir(staging)):
+                if name.startswith(prefix):  # _SUCCESS / .crc markers stay behind
+                    commit.publish(
+                        os.path.join(staging, name), os.path.join(path_or_ident, name)
+                    )
     return "parquet"

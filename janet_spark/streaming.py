@@ -257,24 +257,22 @@ def update_index_stream(
     documents computes its per-term doc-frequency DELTA and merges it
     additively into the df table (the contract `index_incremental_merge`
     value-checks in batch). foreachBatch rewrites the merged vocabulary
-    table through a staging dir + atomic directory swap — the vocabulary
+    table through a staging dir and `commit.publish` — the vocabulary
     is orders of magnitude smaller than the corpus, so a full rewrite per
     batch stays cheap at ANY corpus size (it scales with distinct terms,
     not documents).
 
-    Delivery note: the swap makes each batch's merge atomic against
-    readers, and the stream checkpoint prevents re-reading input files —
-    but a crash BETWEEN the swap and the checkpoint commit would re-merge
-    one batch (at-least-once). Production closes that with Iceberg
-    `MERGE INTO` keyed on batchId (DEPLOYMENT.md); the batch resume
-    anti-join remains the full-rebuild backstop. A crash INSIDE the swap
-    (after index_dir moved to __old, before staging moved in) is recovered
-    at the top of the next merge: a missing index_dir with a standing
-    __old dir is renamed back before reading, so the accumulated history
-    is never lost to a single-batch rebuild."""
+    Delivery note: `commit.publish` makes each batch's merge atomic
+    against readers, and the stream checkpoint prevents re-reading input
+    files — but a crash BETWEEN the publish and the checkpoint commit
+    would re-merge one batch (at-least-once). Production closes that with
+    Iceberg `MERGE INTO` keyed on batchId (DEPLOYMENT.md); the batch
+    resume anti-join remains the full-rebuild backstop. Each merge runs
+    `commit.recover` before reading, so a crash inside a publish never
+    loses the accumulated history to a single-batch rebuild."""
     import os
-    import shutil
 
+    from janet_spark import commit
     from janet_spark.search import _tokens
 
     stream = (
@@ -283,22 +281,14 @@ def update_index_stream(
         .parquet(input_dir)
     )
 
+    parent = os.path.dirname(os.path.abspath(index_dir))
+
     def merge_batch(batch_df, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        # recover a stranded swap: a crash between rename(index_dir, __old)
-        # and rename(staging, index_dir) leaves index_dir ABSENT with the
-        # full accumulated table at __old — without this, the replayed
-        # batch would see no index and silently reset every accumulated
-        # document frequency to this one batch's delta
-        old = f"{index_dir}__old"
-        if not os.path.isdir(index_dir) and os.path.isdir(old):
-            os.rename(old, index_dir)
-        elif os.path.isdir(old):
-            # stale __old from a crash AFTER rename(staging, index_dir) but
-            # before the rmtree below: index_dir is already current, so the
-            # leftover is garbage — without this, rename(index_dir, old)
-            # below fails with ENOTEMPTY and wedges the stream
-            shutil.rmtree(old, ignore_errors=True)
+        # without this, a replayed batch after a crash mid-publish would
+        # see no index and reset every accumulated document frequency to
+        # this one batch's delta
+        commit.recover(parent)
         delta = (
             batch_df.select(
                 "doc_id",
@@ -317,12 +307,9 @@ def update_index_stream(
             )
         else:
             merged = delta.select("tok", F.col("df").cast("long").alias("df"))
-        staging = f"{index_dir}__staging"
-        merged.write.mode("overwrite").parquet(staging)
-        if os.path.isdir(index_dir):
-            os.rename(index_dir, old)
-        os.rename(staging, index_dir)
-        shutil.rmtree(old, ignore_errors=True)
+        with commit.staged(parent, "index") as staging:
+            merged.write.mode("overwrite").parquet(staging)
+            commit.publish(staging, index_dir)
 
     return (
         stream.writeStream.foreachBatch(merge_batch)
@@ -501,7 +488,7 @@ def hll_register_stream(
     mergeable sketch state, shared bit-for-bit with the batch operator
     (`distinct_count_hll`), so batch and stream cannot drift. Exactness
     under replay: foreachBatch is at-least-once — a replayed batch
-    re-commits gen=batch-<id>, which `_write_generation` REPLACES
+    re-commits gen=batch-<id>, which `commit.write_generation` REPLACES
     (idempotent per gen_id), and even a duplicate commit under a new id
     would merge away because registers max-merge (max is idempotent) —
     the property the sum-merge censuses lack and the reason HLL is the

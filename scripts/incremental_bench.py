@@ -52,6 +52,7 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     import janet_spark.dedup_incremental as di
+    from janet_spark.commit import write_generation
     from janet_spark.queries_text import _band_df, q_minhash_lsh_pairs
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -79,7 +80,7 @@ def main() -> int:
     sig = "/tmp/incr_bench_sigs"
     shutil.rmtree(sig, ignore_errors=True)
     t0 = time.time()
-    di._write_generation(_band_df(base), sig, "bootstrap")
+    write_generation(_band_df(base), sig, "bootstrap")
     t_bootstrap = time.time() - t0
 
     # the daily run: sign delta only, mine delta-touching pairs, commit gen

@@ -654,6 +654,7 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
     import pandas as pd
 
     import janet_spark.dedup_incremental as di
+    from janet_spark.commit import generation_dirs
 
     t_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     t_b = "one two three four five six seven eight nine ten"
@@ -669,7 +670,7 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
     # day 1: doc 100 duplicates corpus doc 1 -> bootstrap + one pair
     pairs1, run1 = di.incremental_dedup_run(spark, sig, docs([(100, t_a)]), corpus)
     assert set(map(tuple, pairs1.select("d1", "d2").collect())) == {(1, 100)}
-    gens = {os.path.basename(g) for g in di._generation_dirs(sig)}
+    gens = {os.path.basename(g) for g in generation_dirs(sig)}
     assert gens == {"gen=bootstrap", f"gen={run1}"}
 
     # day 2: doc 200 duplicates the same text. Spy on the sign stage to
@@ -691,7 +692,7 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
     # NOT re-reported
     assert got2 == {(1, 200), (100, 200)}
     assert signed_counts == [1]
-    assert len(di._generation_dirs(sig)) == 3
+    assert len(generation_dirs(sig)) == 3
 
     # a crashed run's staging dir is invisible to readers
     os.makedirs(os.path.join(sig, "_staging_deadrun"))
@@ -720,7 +721,7 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
     # census invariant: the incrementally-merged snapshot equals a full
     # re-aggregation of the signature table (and never re-scanned it)
     census_dir = os.path.join(sig, "census")
-    assert len(di._generation_dirs(census_dir)) == 5  # bootstrap + 4 runs
+    assert len(generation_dirs(census_dir)) == 5  # bootstrap + 4 runs
     got_census = {
         r["band_key"]: (r["bkt_n"], r["rep_doc"])
         for r in di.read_census(spark, census_dir).collect()

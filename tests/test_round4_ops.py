@@ -362,9 +362,9 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
+    from janet_spark.commit import write_generation
     from janet_spark.dedup_incremental import (
         SIG_SCHEMA,
-        _write_generation,
         compact_generations,
         prune_snapshots,
         read_signature_table,
@@ -375,7 +375,7 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
     for day in range(10):
         rows = [(day * 100 + i, (day * 100 + i) * 7 % 997) for i in range(100)]
         df = spark.createDataFrame(rows, SIG_SCHEMA)
-        _write_generation(df, sig, f"run-{1000 + day}-day")
+        write_generation(df, sig, f"run-{1000 + day}-day")
 
     def snapshot():
         return sorted(
@@ -398,7 +398,7 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, i * 7 % 997) for i in range(100)], SIG_SCHEMA
     )
-    _write_generation(df, sig, zombie.removeprefix("gen="))
+    write_generation(df, sig, zombie.removeprefix("gen="))
     assert snapshot() == before  # zombie skipped, not double-counted
     # the next compaction sweeps the zombie
     compact_generations(spark, sig, SIG_SCHEMA, keep_latest=3)
@@ -409,13 +409,13 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
     df = spark.createDataFrame(
         [(2000 + i, i) for i in range(50)], SIG_SCHEMA
     )
-    _write_generation(df, sig, "run-9999-new")
+    write_generation(df, sig, "run-9999-new")
     assert len(snapshot()) == len(before) + 50
 
     # snapshot pruning keeps the newest
     clu = str(tmp_path / "census")
     for day in range(5):
-        _write_generation(
+        write_generation(
             spark.createDataFrame([(day, day, day)], "band_key long, bkt_n long, rep_doc long"),
             clu,
             f"run-{1000 + day}-day",

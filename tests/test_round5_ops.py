@@ -59,21 +59,21 @@ def test_compact_pairs_table_distinct_squeezes_retry_duplicates(spark, tmp_path)
     re-commits identical pairs under a new generation id), so pair-table
     compaction must distinct the union rather than bake the duplicates
     into the compacted generation."""
+    from janet_spark.commit import write_generation
     from janet_spark.dedup_incremental import (
         PAIRS_SCHEMA,
-        _write_generation,
         compact_generations,
         read_pairs_table,
     )
 
     pairs = str(tmp_path / "pairs")
     day1 = spark.createDataFrame([(1, 2, 0.9), (3, 4, 0.8)], PAIRS_SCHEMA)
-    _write_generation(day1, pairs, "run-1000-day")
+    write_generation(day1, pairs, "run-1000-day")
     # the retry: identical pairs re-committed under a new generation
-    _write_generation(day1, pairs, "run-1001-retry")
+    write_generation(day1, pairs, "run-1001-retry")
     day2 = spark.createDataFrame([(5, 6, 0.7)], PAIRS_SCHEMA)
-    _write_generation(day2, pairs, "run-1002-day")
-    _write_generation(
+    write_generation(day2, pairs, "run-1002-day")
+    write_generation(
         spark.createDataFrame([(7, 8, 0.6)], PAIRS_SCHEMA), pairs, "run-1003-day"
     )
 
@@ -492,10 +492,8 @@ def test_ivf_delta_append_equals_rebuilt(spark, tmp_path):
     centroids) must equal the index rebuilt from scratch over the full
     corpus with the same centroids — row-for-row in the assignment table,
     and through compaction."""
-    from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
-        compact_generations,
-    )
+    from janet_spark.commit import live_generation_dirs
+    from janet_spark.dedup_incremental import compact_generations
     from janet_spark.queries_extra import (
         IVF_INDEX_SCHEMA,
         incremental_ivf_index_run,
@@ -512,12 +510,12 @@ def test_ivf_delta_append_equals_rebuilt(spark, tmp_path):
     idx = str(tmp_path / "ivf")
     incremental_ivf_index_run(old, cent, idx, "bootstrap")
     incremental_ivf_index_run(delta, cent, idx, "delta-day2")
-    assert len(_live_generation_dirs(idx)) == 2
+    assert len(live_generation_dirs(idx)) == 2
 
     def table():
         return (
             spark.read.schema(IVF_INDEX_SCHEMA)
-            .parquet(*_live_generation_dirs(idx))
+            .parquet(*live_generation_dirs(idx))
             .select("vec_id", "cell")
             .toPandas()
             .sort_values("vec_id")
@@ -539,7 +537,7 @@ def test_ivf_delta_append_equals_rebuilt(spark, tmp_path):
 
     # compaction (generations disjoint by construction) preserves the table
     compact_generations(spark, idx, IVF_INDEX_SCHEMA, keep_latest=0)
-    assert len(_live_generation_dirs(idx)) == 1
+    assert len(live_generation_dirs(idx)) == 1
     pd.testing.assert_frame_equal(table(), rebuilt)
 
 
@@ -1067,22 +1065,25 @@ def test_decode_payload_rejects_empty_media_loudly():
 
 
 def test_write_table_recovers_stranded_swap(spark, tmp_path):
-    """Crash window between rename(table, __old) and rename(staging,
-    table): the sole surviving copy sits at __old. The next write_table
-    must restore it (never rmtree it) before swapping in the new data —
-    and a plain reader path sees the restored table if no write happens."""
+    """Crash window between the rename-aside and the rename-in of a
+    publish: the sole surviving copy sits at the aside path. The next
+    write_table must restore it (never rmtree it) before swapping in the
+    new data."""
     import os
 
+    from janet_spark import commit
     from janet_spark.sources import write_table
 
     path = str(tmp_path / "tbl")
+    aside = commit.aside_path(path)
     write_table(spark.range(5).toDF("id"), path)
     # simulate the crash: table moved aside, new staging never landed
-    os.rename(path, path + "__old")
+    os.makedirs(os.path.dirname(aside))
+    os.rename(path, aside)
     assert not os.path.isdir(path)
-    write_table(spark.range(9).toDF("id"), path)  # must not delete __old copy
+    write_table(spark.range(9).toDF("id"), path)  # must not delete the aside copy
     assert spark.read.parquet(path).count() == 9
-    assert not os.path.isdir(path + "__old")
+    assert not os.path.isdir(aside)
 
 
 def test_write_generation_race_loser_discards_and_cleans(spark, tmp_path, monkeypatch):
@@ -1091,7 +1092,7 @@ def test_write_generation_race_loser_discards_and_cleans(spark, tmp_path, monkey
     staging debris behind."""
     import os
 
-    import janet_spark.dedup_incremental as di
+    from janet_spark import commit
 
     sig_path = str(tmp_path / "state")
     df = spark.range(3).selectExpr("cast(id as long) as doc_id")
@@ -1106,8 +1107,8 @@ def test_write_generation_race_loser_discards_and_cleans(spark, tmp_path, monkey
             raise OSError(39, "Directory not empty")
         return real_rename(src, dst)
 
-    monkeypatch.setattr(di.os, "rename", racing_rename)
-    final = di._write_generation(df, sig_path, "raced")
+    monkeypatch.setattr(commit.os, "rename", racing_rename)
+    final = commit.write_generation(df, sig_path, "raced")
     assert os.path.isdir(final)
     with open(os.path.join(final, "part-0.parquet")) as f:
         assert f.read() == "winner"  # the winner's generation survived whole
@@ -1396,8 +1397,8 @@ def test_maintained_retention_no_rebootstrap_after_compaction(spark, tmp_path):
     import os
     from datetime import datetime as DT, timedelta
 
+    from janet_spark.commit import live_generation_dirs
     from janet_spark.dedup_incremental import (
-        _live_generation_dirs,
         compact_generations,
         state_dir_for_input,
     )
@@ -1425,9 +1426,9 @@ def test_maintained_retention_no_rebootstrap_after_compaction(spark, tmp_path):
     ap = state_dir_for_input(sf, "events.parquet", "retention_activity")
     compact_generations(spark, fp, RETENTION_FIRST_SCHEMA, keep_latest=0)
     compact_generations(spark, ap, RETENTION_ACTIVITY_SCHEMA, keep_latest=0)
-    before = (set(_live_generation_dirs(fp)), set(_live_generation_dirs(ap)))
+    before = (set(live_generation_dirs(fp)), set(live_generation_dirs(ap)))
     _maintained_retention(spark, sf)
-    after = (set(_live_generation_dirs(fp)), set(_live_generation_dirs(ap)))
+    after = (set(live_generation_dirs(fp)), set(live_generation_dirs(ap)))
     assert after == before  # no re-bootstrap generations appeared
 
 

@@ -344,12 +344,13 @@ def test_update_index_stream_additive_merge(spark, tmp_path):
 
 
 def test_update_index_stream_recovers_stranded_swap(spark, tmp_path):
-    """Round-3 advice: a crash between rename(index, __old) and
-    rename(staging, index) leaves index_dir absent with the full history
-    at __old. The next batch must rename it back before reading — not
-    rebuild the table from that batch's delta alone."""
+    """Round-3 advice: a crash between the rename-aside and the
+    rename-in of a publish leaves index_dir absent with the full history
+    at the aside path. The next batch must rename it back before reading
+    — not rebuild the table from that batch's delta alone."""
     import os
 
+    from janet_spark import commit
     from janet_spark.streaming import update_index_stream
 
     landing = str(tmp_path / "docs")
@@ -374,8 +375,9 @@ def test_update_index_stream_recovers_stranded_swap(spark, tmp_path):
         "sort",
     }
 
-    # simulate the mid-swap crash: history stranded at __old, index gone
-    os.rename(index, f"{index}__old")
+    # simulate the mid-swap crash: history stranded aside, index gone
+    os.makedirs(os.path.dirname(commit.aside_path(index)))
+    os.rename(index, commit.aside_path(index))
 
     write_docs([(1, "merge table", "en", "s1", 11)])
     q = update_index_stream(spark, landing, index, ckpt)
@@ -385,19 +387,20 @@ def test_update_index_stream_recovers_stranded_swap(spark, tmp_path):
     # accumulated history survived the stranded swap: df('spark') from
     # batch 1 is still there, and 'merge' merged additively across both
     assert got == {"spark": 1, "merge": 2, "sort": 1, "table": 1}
-    assert not os.path.isdir(f"{index}__old")
+    assert not os.path.isdir(commit.aside_path(index))
 
 
 def test_update_index_stream_sweeps_stale_old_dir(spark, tmp_path):
-    """Round-4 advice (medium): the OTHER swap crash window — after
-    rename(staging, index) but before rmtree(__old) — leaves a non-empty
-    __old ALONGSIDE a current index. On the replayed batch the stranded-
-    swap recovery doesn't apply (index exists), and without sweeping the
-    stale __old, rename(index, __old) fails ENOTEMPTY and wedges the
-    stream permanently."""
+    """Round-4 advice (medium): the OTHER swap crash window — after the
+    rename-in but before the aside copy is deleted — leaves a non-empty
+    aside copy ALONGSIDE a current index. On the replayed batch the
+    stranded-swap recovery doesn't apply (index exists), and without
+    sweeping the stale aside copy, renaming the index aside fails
+    ENOTEMPTY and wedges the stream permanently."""
     import os
     import shutil
 
+    from janet_spark import commit
     from janet_spark.streaming import update_index_stream
 
     landing = str(tmp_path / "docs")
@@ -418,8 +421,8 @@ def test_update_index_stream_sweeps_stale_old_dir(spark, tmp_path):
     q.awaitTermination(120)
 
     # simulate the crash AFTER the swap completed but BEFORE cleanup:
-    # index is current, a non-empty __old lingers
-    shutil.copytree(index, f"{index}__old")
+    # index is current, a non-empty aside copy lingers
+    shutil.copytree(index, commit.aside_path(index))
 
     write_docs([(1, "merge table", "en", "s1", 11)])
     q = update_index_stream(spark, landing, index, ckpt)
@@ -427,7 +430,7 @@ def test_update_index_stream_sweeps_stale_old_dir(spark, tmp_path):
 
     got = {r["tok"]: r["df"] for r in spark.read.parquet(index).collect()}
     assert got == {"spark": 1, "merge": 2, "sort": 1, "table": 1}
-    assert not os.path.isdir(f"{index}__old")
+    assert not os.path.isdir(commit.aside_path(index))
 
 
 def test_curate_turns_stream_gate_and_decontamination(spark, tmp_path):
