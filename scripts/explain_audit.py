@@ -1,7 +1,9 @@
-"""Physical-plan audit: dump .explain("formatted") for the headline queries
-and grep the plan properties that matter at 100 TB — predicate pushdown
-(PushedFilters), column pruning (ReadSchema), whole-stage codegen spans,
-broadcast joins, and shuffle (Exchange) counts. Output -> PLANS.md.
+"""Physical-plan audit: take .explain("formatted") of every registered
+query and count the plan properties that matter at 100 TB — shuffle
+(Exchange) counts, broadcast joins, Python (Arrow) stages, predicate
+pushdown (PushedFilters) and column pruning (scan output widths). Writes
+one summary row per query to PLANS.md; a full plan is one
+`df.explain("formatted")` away.
 
 Usage: python scripts/explain_audit.py [sf_dir]
 """
@@ -14,151 +16,6 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-AUDITED = [
-    "pricing_summary",
-    "point_lookup",
-    "resume_anti_join",
-    "broadcast_brand_revenue",
-    "revenue_by_region",
-    "rollup_revenue",
-    "latest_event_per_user",
-    "ordered_concat",
-    "manifest_upsert",
-    "exact_dedup",
-    "minhash_lsh_pairs",
-    "incremental_neardup",
-    "ann_cosine_topk",
-    "reassemble_convs",
-    "search_index_projection",
-    "distinct_users",
-    "value_percentiles",
-    "customer_order_fulljoin",
-    "moving_avg_value",
-    "multi_keyword_spans",
-    "disjunctive_upsert",
-    "asof_join",
-    "range_join_banded",
-    "pii_scrub",
-    "hash_sample",
-    "stratified_sample",
-    "curation_pipeline",
-    "event_type_pivot",
-    "set_ops_users",
-    "unpivot_doc_stats",
-    "rank_functions",
-    "lateral_top_orders",
-    "authorized_events",
-    "image_header_probe",
-    "flaky_enrichment",
-    "embed_neardup_blocked",
-    "ann_ivf_topk",
-    "langs_per_source",
-    "lang_id",
-    # round 3
-    "ranked_search",
-    "fuzzy_search",
-    "typo_ranked_search",
-    "phrase_search",
-    "top_terms_per_doc",
-    "search_with_snippets",
-    "index_incremental_merge",
-    "token_counts_bpe",
-    # curation suite
-    "quality_repetition",
-    "chunk_dedup",
-    "decontaminate",
-    "lm_score",
-    "sequence_pack",
-    "doc_fingerprint",
-    "curation_pipeline_v2",
-    "substring_dedup",
-    "unicode_clean",
-    "corpus_shuffle",
-    "cluster_safe_split",
-    "kmeans_assign",
-    "semdedup",
-    "pack_examples",
-    # conversation-level curation
-    "conv_dedup",
-    "conv_stats",
-    "conv_budget_truncate",
-    "tool_call_validate",
-    "conv_quality_gate",
-    "conv_pack",
-    "conv_training_pipeline",
-    "conv_loss_mask",
-    # dialogue-structure suite
-    "conv_prefix_stats",
-    "conv_branch_dedup",
-    "conv_merge_roles",
-    "conv_tail_truncate",
-    "turn_boilerplate",
-    "best_of_n",
-    "preference_pairs",
-    "sft_examples",
-    "conv_lang_consistency",
-    "pii_pseudonymize",
-    "conv_decontaminate",
-    "prompt_safe_split",
-    # round-3 tail: recipe materialization, SFT render, conv near-dup,
-    # chunking, tokenizer-training census
-    "apply_mixture",
-    "chat_render",
-    "conv_neardup",
-    "doc_chunk",
-    "bpe_pair_census",
-    "bigram_lm",
-    "corpus_report",
-    "conv_dedup_fuzzy",
-    "quality_features",
-    "decontaminate_semantic",
-    "contrastive_pairs",
-    "incremental_conv_neardup",
-    "dedup_report",
-    # round 4: search-as-you-type + maintained-generation report paths
-    "prefix_search",
-    "suggest_search",
-    "dedup_report_incremental",
-    "contrastive_pairs_incremental",
-    "token_counts_bpe_1k",
-    "incremental_embed_neardup",
-    "ann_ivf_topk_indexed",
-    # round 5 (facade fixtures ranked/typo/prefix/suggest already audited
-    # above pick up the refactored plans on regen)
-    "ann_ivf_topk_indexed_delta",
-    "image_decode_stats",
-    "audio_decode_stats",
-    "video_frame_sample",
-    "image_resize_stats",
-    # round-5 tail: framed audio features, PQ-compressed ANN, IVF spill
-    "audio_frame_features",
-    "ann_pq_topk",
-    "ann_pq_rerank_topk",
-    "ann_ivfadc_topk",
-    "ann_ivf_topk_spill",
-    "per_source_cap",
-    # round-5 tail: corpus-frequency line dedup (standalone + maintained)
-    "line_dedup_corpus",
-    "line_dedup_corpus_incremental",
-    "conv_boilerplate_strip",
-    # round-5 tail: DSIR importance weights + deterministic resample
-    "dsir_importance",
-    "dsir_select",
-    "dsir_importance_incremental",
-    "bloom_dedup_prefilter",
-    "heavy_hitters_cms",
-    "distinct_count_hll",
-    "distinct_count_hll_incremental",
-    "quantile_hist",
-    "quantile_hist_incremental",
-    "funnel_conversion",
-    "funnel_windowed",
-    "retention_cohorts",
-    "retention_cohorts_incremental",
-    "event_transitions",
-    "funnel_latency",
-]
 
 
 def plan_of(df) -> str:
@@ -205,7 +62,7 @@ def main() -> int:
 
     out = io.StringIO()
     out.write(
-        "# PLANS — physical-plan audit of headline queries\n\n"
+        "# PLANS — physical-plan audit of every registered query\n\n"
         "Generated by `scripts/explain_audit.py` (re-run to refresh). The\n"
         "summary row per query counts shuffles (`Exchange`), broadcast hash\n"
         "joins, Python (Arrow) stages, whether filters reached the parquet\n"
@@ -214,21 +71,20 @@ def main() -> int:
         "| query | shuffles | broadcast joins | python stages | pushed filters | scan col counts |\n"
         "|---|---|---|---|---|---|\n"
     )
-    details = io.StringIO()
-    for name in AUDITED:
-        df = qs[name](spark, sf_dir)
-        plan = plan_of(df)
-        s = summarize(plan)
+    for name, fn in qs.items():
+        s = summarize(plan_of(fn(spark, sf_dir)))
+        # release intermediates a query persisted while it was built
+        spark.catalog.clearCache()
         out.write(
             f"| {name} | {s['exchanges']} | {s['broadcast_joins']} | "
             f"{s['python_stages']} | {'yes' if s['pushed_filters'] else '-'} | "
             f"{s['scan_cols']} |\n"
         )
-        details.write(f"\n## {name}\n\n```\n{plan.strip()}\n```\n")
         print(name, s)
 
     out.write(
         "\nNotes:\n"
+        "* A full plan is `queries()[name](spark, sf_dir).explain(\"formatted\")`.\n"
         "* `ordered_concat`/`reassemble_convs` shuffle counts include the\n"
         "  final presentation `orderBy` used only for oracle comparison.\n"
         "* AQE may fuse or renumber stages at runtime; counts are from the\n"
@@ -239,7 +95,6 @@ def main() -> int:
         "  runtime — the signature UDF executes once per row, and the\n"
         "  effective exchange count is far below the static figure.\n"
     )
-    out.write(details.getvalue())
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "PLANS.md"), "w") as f:
         f.write(out.getvalue())

@@ -55,7 +55,7 @@ def main() -> int:
     from janet_spark.commit import write_generation
     from janet_spark.queries_text import _band_df, q_minhash_lsh_pairs
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(cpus))

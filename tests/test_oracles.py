@@ -1,7 +1,7 @@
 """Registry queries against their DuckDB oracles at sf0.001, compared the
 way scripts/check_oracles.py compares them: row count, column names and
-the order-insensitive value hash. A subset of the registry; the full
-sweep is scripts/check_oracles.py."""
+the order-insensitive value hash. The bench headline and a few more; the
+full sweep over the registry is scripts/check_oracles.py."""
 
 from __future__ import annotations
 
@@ -9,17 +9,16 @@ import duckdb
 import pytest
 
 import __spark_entry__ as entry
+import bench
 from scripts.check_oracles import TABLES, value_hash
 
 SF = entry.SF0001
 
-QUERIES = [
-    "token_counts_bpe",
-    "clean_canonicalize",
-    "doc_fingerprint",
-    "funnel_conversion",
-    "funnel_windowed",
-]
+# the bench headline plus three oracles that render nontrivial logic in
+# SQL: the BPE merge chain and the unbounded and 7-day funnel windows
+QUERIES = sorted(
+    set(bench.HEADLINE) | {"token_counts_bpe", "funnel_conversion", "funnel_windowed"}
+)
 
 
 @pytest.fixture(scope="module")

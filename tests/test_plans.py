@@ -1,7 +1,8 @@
 """Plan-shape regression pins: the physical-plan properties that matter at
 100 TB, asserted so a future change that silently loses a pushed filter, a
 broadcast, or the zero-shuffle point lookup fails CI instead of shipping a
-10x-slower plan. (PLANS.md documents the full audit; these are the
+10x-slower plan. (PLANS.md tabulates shuffle, broadcast, Python-stage,
+pushdown and scan-width counts for every registered query; these are the
 load-bearing invariants.)"""
 
 from __future__ import annotations

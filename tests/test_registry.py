@@ -1,24 +1,26 @@
-"""Every hand-kept query-name list must name registered queries: bench.py
-looks each name up with a KeyError on a miss, and `__spark_entry__`
-would silently skip a stale `_PRIORITY` name. No Spark session needed."""
+"""`__spark_entry__.queries()` is the one query registry that bench.py,
+scripts/explain_audit.py and scripts/check_oracles.py iterate. These
+checks keep it whole. No Spark session needed."""
 
 from __future__ import annotations
 
-import pytest
-
 import __spark_entry__ as entry
 import bench
-from scripts.explain_audit import AUDITED
-
-LISTS = {
-    "explain_audit.AUDITED": AUDITED,
-    "__spark_entry__._PRIORITY": entry._PRIORITY,
-    "bench.HEADLINE": bench.HEADLINE,
-    "bench.EXTENDED": bench.EXTENDED,
-}
 
 
-@pytest.mark.parametrize("list_name", sorted(LISTS))
-def test_named_queries_are_registered(list_name):
-    missing = sorted(set(LISTS[list_name]) - set(entry.queries()))
-    assert not missing, f"{list_name} names unregistered queries: {missing}"
+def test_headline_is_registered():
+    missing = sorted(set(bench.HEADLINE) - set(entry.queries()))
+    assert not missing, f"bench.HEADLINE names unregistered queries: {missing}"
+
+
+def test_module_dicts_share_no_name():
+    # the merge is dict.update, which would silently shadow a duplicate
+    sizes = [len(d) for d in entry._module_queries()]
+    assert sum(sizes) == len(entry.queries()), sizes
+
+
+def test_every_query_has_an_oracle():
+    oracles = entry.oracle_sql()
+    assert set(oracles) == set(entry.queries())
+    bad = sorted(n for n, sql in oracles.items() if not (isinstance(sql, str) and sql.strip()))
+    assert not bad, f"queries without oracle SQL: {bad}"
