@@ -70,20 +70,25 @@ def data_dir(output_path: str) -> str:
 
 
 def completed_buckets(spark: SparkSession, output_path: str) -> set[int]:
-    """Buckets with a successful lineage row (the resume set)."""
+    """Buckets with a successful lineage row (the resume set).
+
+    Read in-process with pyarrow, not with Spark, for the reason
+    `write_lineage` writes that way: a Spark read of these few tiny files
+    costs three jobs. Projecting onto `status` and `part_bucket` lets
+    Spark-written (INT96 timestamps) and pyarrow-written files mix, and
+    pyarrow's discovery skips `_SUCCESS` and `.crc` siblings as Spark does.
+    `spark` is unused; callers keep passing it."""
+    import pyarrow.parquet as pq
+
     ldir = lineage_dir(output_path)
     if not os.path.isdir(ldir) or not any(
         f.endswith(".parquet") for f in os.listdir(ldir)
     ):
         return set()
-    rows = (
-        spark.read.parquet(ldir)
-        .filter(F.col("status") == "success")
-        .select("part_bucket")
-        .distinct()
-        .collect()
+    done = pq.read_table(
+        ldir, columns=["part_bucket"], filters=[("status", "==", "success")]
     )
-    return {r[0] for r in rows}
+    return set(done.column("part_bucket").to_pylist())
 
 
 def resume_filter(df: DataFrame, done: set[int], bucket_col: str = "part_bucket") -> DataFrame:

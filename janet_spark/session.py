@@ -3,11 +3,17 @@
 Tuned for the target workload (wide string payloads through Arrow-batched
 pandas UDFs, shuffle-heavy joins/windows):
 
-* AQE on (runtime re-plan, skew-join backstop to our explicit salting),
+* AQE on (runtime re-plan, coalescing of small shuffle partitions, and
+  splitting of skewed join partitions),
 * Arrow transfer on, with a bounded records-per-batch so long `text`
   payloads don't blow executor memory (SURVEY.md §7 "hard parts" #6),
-* shuffle partitions sized for the local[32] sandbox; on a real cluster
-  this is overridden via spark-submit --conf.
+* a fixed shuffle-partition default; on a real cluster this is overridden
+  via spark-submit --conf.
+
+File-scan split size is left to Spark's bytes-per-core rule, ``min(128 MB,
+max(4 MB, (input bytes + 4 MB x files) / cores))``: an input smaller than
+cores x 128 MB gets about one split per core, so the narrow extraction map
+over the scan runs as one wave of Python tasks.
 """
 
 from __future__ import annotations
@@ -27,11 +33,6 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 #   32 cores: 8192 -> 21.0 s, 16384 -> 17.4 s (226k turns/s)
 # 32768 regresses (worker memory pressure/locality), so 16384 is the knee.
 ARROW_MAX_RECORDS_PER_BATCH = 16384
-# Split size for file scans: the extraction stage is a NARROW map over the
-# scan (no pre-shuffle), so scan splits ARE its parallelism. 32 MB splits
-# give local[32] >= 32 tasks even on a ~1.5 GB input; on a real cluster this
-# also bounds per-task Arrow buffering for wide text rows.
-FILES_MAX_PARTITION_BYTES = str(32 * 1024 * 1024)
 
 
 def build_session(
@@ -57,7 +58,6 @@ def build_session(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_MAX_RECORDS_PER_BATCH),
         )
-        .config("spark.sql.files.maxPartitionBytes", FILES_MAX_PARTITION_BYTES)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("JANET_SPARK_DRIVER_MEM", "8g"))
     )
@@ -77,7 +77,6 @@ def tune_for_session(spark: SparkSession) -> None:
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(
             ARROW_MAX_RECORDS_PER_BATCH
         ),
-        "spark.sql.files.maxPartitionBytes": FILES_MAX_PARTITION_BYTES,
         "spark.sql.session.timeZone": "UTC",
     }
     for k, v in runtime.items():

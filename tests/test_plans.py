@@ -140,6 +140,38 @@ def test_extraction_is_narrow_no_pre_shuffle(spark):
     assert _shuffles(plan) == 0, plan
 
 
+def test_scan_splits_one_per_core(spark, tmp_path):
+    """Because extraction is a narrow map over the scan, scan splits are its
+    Python tasks. Many small files must pack into one split per core (one
+    wave), as Spark's bytes-per-core rule gives; a 32 MB split cap would
+    pack these 48 files into 6 splits on 4 cores."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from janet_spark.sources import read_transcripts
+
+    n_rows = 300
+    ts = datetime(2024, 1, 1, tzinfo=timezone.utc)
+    for i in range(48):
+        pq.write_table(
+            pa.table(
+                {
+                    "conv_id": [f"c{i}-{r % 10}" for r in range(n_rows)],
+                    "turn_idx": pa.array(range(n_rows), pa.int32()),
+                    "role": ["user"] * n_rows,
+                    "text": [f"turn {r:05d} of file {i:02d}" for r in range(n_rows)],
+                    "tool": [""] * n_rows,
+                    "ts": pa.array([ts] * n_rows, pa.timestamp("us", tz="UTC")),
+                }
+            ),
+            str(tmp_path / f"part-{i:02d}.parquet"),
+        )
+    df = read_transcripts(spark, str(tmp_path))
+    assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
 def test_curation_suite_plan_shapes(spark):
     """The curation operators' load-bearing invariants: the boilerplate /
     decontamination / LM probes are BROADCAST joins (never a corpus-keyed
