@@ -1,6 +1,7 @@
 """Main-content extraction from HTML payloads (Readability/Boilerpipe-style).
 
-A lightweight tag-stack parse over the raw string, followed by block
+A lightweight tag parse over the raw string (one regex split, then depth
+counters for boilerplate containers and anchors), followed by block
 classification on text density and link ratio. This is the engine's analog
 of the reference's "turn an opaque payload into text" stage (the pdfjs
 text-item walk at ``apps/ocr/src/lib/pdf-parse.ts:6-19`` and the annotation
@@ -27,15 +28,17 @@ only on rows classified as HTML (cheap vectorized pre-filter upstream).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field
 
 from janet_spark.extract.text_rules import canonicalize_str
 
+# groups: the whole token, then (for an element tag) the closing slash, the
+# name and the self-closing slash, so TOKEN_RE.split yields text and tokens
+# in one C-level pass
 TOKEN_RE = re.compile(
-    r"<!--.*?-->"  # comment
+    r"(<!--.*?-->"  # comment
     r"|<!\[CDATA\[.*?\]\]>"  # cdata
     r"|<![^>]*>"  # doctype / declaration
-    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:-]*)((?:\"[^\"]*\"|'[^']*'|[^>\"'])*)(/?)\s*>",
+    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:-]*)(?:\"[^\"]*\"|'[^']*'|[^>\"'])*(/?)\s*>)",
     re.S,
 )
 
@@ -51,6 +54,8 @@ BOILERPLATE_TAGS = frozenset(
     "select option template".split()
 )
 VOID_TAGS = frozenset("br hr img input meta link area base col embed source track wbr".split())
+# a closing tag of these ends the current block
+FLUSH_TAGS = BLOCK_TAGS | BOILERPLATE_TAGS
 
 
 def looks_like_html(s: str) -> bool:
@@ -58,19 +63,23 @@ def looks_like_html(s: str) -> bool:
     fallback chain, ``apps/legacy/src/services/pdf.ts:145-171``)."""
     if "<" not in s:
         return False
-    m = HTML_SNIFF_RE.findall(s)
-    return len(m) >= 2
+    tags = HTML_SNIFF_RE.finditer(s)
+    return next(tags, None) is not None and next(tags, None) is not None
 
 
-@dataclass
 class _Block:
-    start: int = -1  # first raw text char offset
-    end: int = -1  # last raw text char offset (exclusive)
-    pieces: list[str] = field(default_factory=list)
-    anchor_chars: int = 0
-    total_chars: int = 0
-    inner_tags: int = 0
-    boilerplate: bool = False
+    __slots__ = (
+        "start", "end", "pieces", "anchor_chars", "total_chars", "inner_tags", "boilerplate"
+    )
+
+    def __init__(self, boilerplate: bool = False) -> None:
+        self.start = -1  # first raw text char offset
+        self.end = -1  # last raw text char offset (exclusive)
+        self.pieces: list[str] = []
+        self.anchor_chars = 0
+        self.total_chars = 0
+        self.inner_tags = 0
+        self.boilerplate = boilerplate
 
 
 def _keep_by_stats(b: _Block) -> bool:
@@ -117,49 +126,59 @@ def finish_blocks(
 
 
 def parse_blocks(payload: str) -> list[_Block]:
-    """Tag-stack parse only: the document's block list with raw pieces and
+    """Tag parse only: the document's block list with raw pieces and
     density/link stats, NO canonicalization (see finish_blocks)."""
-    stack: list[str] = []  # open element names
+    # open boilerplate containers and anchors are the only nesting the
+    # classification reads, so two depth counters stand in for the stack
     boiler_depth = 0
     anchor_depth = 0
     blocks: list[_Block] = []
     cur = _Block()
     pos = 0
-    n = len(payload)
 
     def flush() -> None:
         nonlocal cur
         if cur.pieces:
             blocks.append(cur)
-        cur = _Block(boilerplate=boiler_depth > 0)
+            cur = _Block(boiler_depth > 0)
+        else:
+            # nothing but tag counts to discard: reuse the block in place
+            cur.inner_tags = 0
+            cur.boilerplate = boiler_depth > 0
 
-    def add_text(text: str, start: int, end: int) -> None:
-        if not text.strip():
+    def add_text(text: str, start: int) -> None:
+        stripped = text.strip()
+        if not stripped:
             # pure-whitespace node: keep as separator only if block has text
             if cur.pieces:
                 cur.pieces.append(" ")
             return
+        # stripped starts with a non-space char, so its first occurrence
+        # is right after the leading whitespace
+        lead = text.find(stripped)
         if cur.start < 0:
-            cur.start = start + (len(text) - len(text.lstrip()))
-        cur.end = end - (len(text) - len(text.rstrip()))
+            cur.start = start + lead
+        cur.end = start + lead + len(stripped)
         cur.pieces.append(text)
-        cur.total_chars += len(text.strip())
+        cur.total_chars += len(stripped)
         if anchor_depth > 0:
-            cur.anchor_chars += len(text.strip())
+            cur.anchor_chars += len(stripped)
         if boiler_depth > 0:
             cur.boilerplate = True
 
-    for m in TOKEN_RE.finditer(payload):
-        if m.start() > pos:
-            add_text(payload[pos : m.start()], pos, m.start())
-        pos = m.end()
-        name = m.group(2)
+    # split() alternates text and a token's groups; the last text is
+    # left over after the 5-tuples
+    parts = TOKEN_RE.split(payload)
+    it = iter(parts)
+    for text, token, slash, name, self_slash in zip(it, it, it, it, it):
+        if text:
+            add_text(text, pos)
+            pos += len(text)
+        pos += len(token)
         if name is None:  # comment / doctype
             continue
         name = name.lower()
-        closing = m.group(1) == "/"
-        self_closing = m.group(4) == "/" or name in VOID_TAGS
-        if closing:
+        if slash == "/":
             # leave the boilerplate scope BEFORE flushing: the flushed
             # block (the nav/footer content) already carries its
             # boilerplate flag from add_text, but the fresh block flush()
@@ -167,19 +186,13 @@ def parse_blocks(payload: str) -> list[_Block]:
             # </nav>/</footer> is body content, not boilerplate
             if name in BOILERPLATE_TAGS and boiler_depth > 0:
                 boiler_depth -= 1
-            if name in BLOCK_TAGS or name in BOILERPLATE_TAGS:
+            if name in FLUSH_TAGS:
                 flush()
             else:
                 cur.inner_tags += 1
             if name == "a" and anchor_depth > 0:
                 anchor_depth -= 1
-            # pop to matching open tag if present (tolerant of bad nesting)
-            if name in stack:
-                while stack and stack[-1] != name:
-                    stack.pop()
-                if stack:
-                    stack.pop()
-        elif self_closing:
+        elif self_slash == "/" or name in VOID_TAGS:
             if name == "br":
                 # a literal line separator INSIDE the block — appended
                 # directly (add_text's whitespace guard would degrade it
@@ -189,7 +202,6 @@ def parse_blocks(payload: str) -> list[_Block]:
             else:
                 cur.inner_tags += 1
         else:
-            stack.append(name)
             if name in BOILERPLATE_TAGS:
                 flush()
                 boiler_depth += 1
@@ -199,9 +211,10 @@ def parse_blocks(payload: str) -> list[_Block]:
                 cur.inner_tags += 1
                 if name == "a":
                     anchor_depth += 1
-    if pos < n:
-        add_text(payload[pos:], pos, n)
-    flush()
+    if parts[-1]:
+        add_text(parts[-1], pos)
+    if cur.pieces:
+        blocks.append(cur)
     return blocks
 
 

@@ -13,9 +13,13 @@ batch transform:
    pdf.ts:158-164); both empty -> ok=false lineage signal
    (fileProcessor.ts:63-77)
 
-No per-row Python on the dominant plain-text path: classification, trimming
-offsets and canonicalization are pandas/C vectorized; only HTML rows and
-fallback rows (rare by construction) take the per-string parser.
+On the dominant plain-text path, canonicalization runs as Arrow compute
+kernels (RE2) over the whole column; the HTML prefilter and the trimming
+offsets are pandas string methods, which still loop in Python per row.
+HTML rows take the per-string tag parse, whose blocks are then
+canonicalized in one Arrow pass per batch, and fallback rows (rare by
+construction) the scalar canonicalizer. Rows are read and written by
+position, never by index label.
 """
 
 from __future__ import annotations
@@ -44,21 +48,20 @@ def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     """Extract one Arrow batch. Input columns: conv_id, turn_idx, role,
     text, tool, ts. Output: EXTRACT_OUTPUT_DDL.
 
-    Results accumulate in positional numpy arrays — scalar stores into
-    ndarray slots, not pandas ``Series.__setitem__`` (profiled: ~160k
-    per-element Series setitems cost ~25% of the whole batch on the
-    HTML-heavy mix; ndarray stores make that overhead vanish)."""
+    Rows are read from and results stored into numpy arrays by position,
+    not through pandas label lookups or ``Series.__setitem__`` (profiled:
+    ~160k per-element Series setitems cost ~25% of the whole batch on the
+    HTML-heavy mix, and label lookups of HTML and fallback rows ~6k calls
+    per 16,384-row batch; ndarray access makes that overhead vanish)."""
     import numpy as np
 
     n = len(pdf)
-    positions = {ix: i for i, ix in enumerate(pdf.index)}
     text = pdf["text"].fillna("").astype(str)
-    tool = (
-        pdf["tool"].fillna("").astype(str)
+    text_at = text.to_numpy()
+    tool_at = (
+        pdf["tool"].fillna("").astype(str).to_numpy()
         if "tool" in pdf
-        # substitute Series must carry the BATCH's index — the fallback
-        # loop indexes it by pdf.index labels, not positions
-        else pd.Series([""] * n, index=pdf.index)
+        else np.full(n, "", dtype=object)
     )
 
     extracted = np.full(n, "", dtype=object)
@@ -68,23 +71,18 @@ def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     ok = np.zeros(n, dtype=bool)
 
     # cheap vectorized prefilter, exact per-row check only where '<' occurs
-    maybe_html = text.str.contains("<", regex=False)
-    html_mask = pd.Series(False, index=pdf.index)
-    if maybe_html.any():
-        html_mask.loc[maybe_html] = (
-            text[maybe_html].map(looks_like_html).astype(bool)
-        )
-    html_mask = html_mask.astype(bool)
+    html_mask = np.zeros(n, dtype=bool)
+    maybe_html = np.flatnonzero(text.str.contains("<", regex=False).to_numpy())
+    html_mask[maybe_html] = [looks_like_html(text_at[p]) for p in maybe_html]
 
     # --- plain path (vectorized) ---
-    plain_idx = pdf.index[(~html_mask).to_numpy()]
-    if len(plain_idx):
-        raw = text[plain_idx]
+    plain_pos = np.flatnonzero(~html_mask)
+    if len(plain_pos):
+        raw = text.iloc[plain_pos]
         canon = canonicalize_series(raw)
         nonempty = (canon.str.len() > 0).to_numpy()
-        pe = plain_idx[nonempty]
-        if len(pe):
-            pe_pos = np.fromiter((positions[ix] for ix in pe), dtype=np.int64)
+        pe_pos = plain_pos[nonempty]
+        if len(pe_pos):
             extracted[pe_pos] = canon[nonempty].to_numpy()
             ok[pe_pos] = True
             kept[pe_pos] = 1
@@ -96,15 +94,14 @@ def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
                     {"start": int(s_arr[j]), "end": int(e_arr[j]), "kind": "plain"}
                 ]
         # --- fallback path: empty text -> tool payload (rare) ---
-        for ix in plain_idx[~nonempty]:
-            raw_tool = tool[ix]
+        for pos in plain_pos[~nonempty]:
+            raw_tool = tool_at[pos]
             obj = tolerant_json_parse(raw_tool)
             out = obj.get("output") if isinstance(obj, dict) else None
             if isinstance(out, str):
                 out_clean = canonicalize_str(out)
             else:
                 out_clean = ""
-            pos = positions[ix]
             if out_clean:
                 extracted[pos] = out_clean
                 ok[pos] = True
@@ -117,24 +114,20 @@ def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             # else: ok stays False, empty output — failed-extraction row
 
     # --- html path: per-row tag-stack PARSE, but canonicalization of the
-    # resulting blocks runs as ONE vectorized series pass over every block
-    # of every HTML row in the batch (profiled: the per-block scalar
-    # canonicalize inside strip_html was ~40% of batch time on the
-    # HTML-heavy mix — ~5 regex subs per block with template re-parsing
-    # per call; the series path is trigger-gated and C-vectorized) ---
-    html_idx = pdf.index[html_mask.to_numpy()]
-    if len(html_idx):
-        parsed = [parse_blocks(text[ix]) for ix in html_idx]
+    # resulting blocks runs as ONE vectorized pass over every block of
+    # every HTML row in the batch (see canonicalize_series) ---
+    html_pos = np.flatnonzero(html_mask)
+    if len(html_pos):
+        parsed = [parse_blocks(text_at[pos]) for pos in html_pos]
         raw_blocks = ["".join(b.pieces) for blocks in parsed for b in blocks]
         canon_iter = iter(
             canonicalize_series(pd.Series(raw_blocks, dtype=object)).to_numpy()
             if raw_blocks
             else ()
         )
-        for ix, blocks in zip(html_idx, parsed):
+        for pos, blocks in zip(html_pos, parsed):
             texts = [next(canon_iter) for _ in blocks]
             t, sp, k, d = finish_blocks(blocks, texts)
-            pos = positions[ix]
             extracted[pos] = t
             spans[pos] = [
                 {"start": s, "end": e, "kind": kind} for s, e, kind in sp

@@ -34,6 +34,17 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # 32768 regresses (worker memory pressure/locality), so 16384 is the knee.
 ARROW_MAX_RECORDS_PER_BATCH = 16384
 
+# Session settings that can also be set at runtime: build_session starts
+# with them and tune_for_session applies them to a session built elsewhere.
+SESSION_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": str(ARROW_MAX_RECORDS_PER_BATCH),
+    "spark.sql.session.timeZone": "UTC",
+}
+
 
 def build_session(
     app_name: str = "janet-spark",
@@ -50,18 +61,9 @@ def build_session(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
         )
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            str(ARROW_MAX_RECORDS_PER_BATCH),
-        )
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("JANET_SPARK_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**SESSION_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
@@ -69,17 +71,7 @@ def build_session(
 def tune_for_session(spark: SparkSession) -> None:
     """Apply the engine's runtime-settable defaults to an externally created
     session (the driver hands us one in ``__spark_entry__``)."""
-    runtime = {
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.sql.execution.arrow.maxRecordsPerBatch": str(
-            ARROW_MAX_RECORDS_PER_BATCH
-        ),
-        "spark.sql.session.timeZone": "UTC",
-    }
-    for k, v in runtime.items():
+    for k, v in SESSION_CONF.items():
         try:
             spark.conf.set(k, v)
         except Exception:  # pragma: no cover - read-only conf on some builds

@@ -1,7 +1,11 @@
 """Property-based cross-dialect parity for the T8 canonicalizer: random
 dirty text must canonicalize identically through (a) the pure-Python scalar
-path, (b) the masked-vectorized pandas path, and (c) the generated DuckDB
-SQL. Catches regex-dialect drift the golden fixtures might miss."""
+path (Python ``re``), (b) the vectorized path (Arrow compute kernels, RE2),
+and (c) the generated DuckDB SQL (RE2). Catches regex-dialect drift the
+golden fixtures might miss. The alphabet carries multibyte letters, so an
+OCR hyphen after one (``é-\\nx``) must survive in every engine
+(``[A-Za-z]`` is ASCII in both), and ``\\x0b`` / ``\\x1c``, which Python
+counts as whitespace but the rules do not."""
 
 from __future__ import annotations
 
@@ -19,9 +23,11 @@ from janet_spark.extract.text_rules import (
 # alphabet biased toward the canonicalizer's trigger characters
 DIRTY = st.text(
     alphabet=st.sampled_from(
-        list("abcXYZ 09.-") + ["\n", "\r", "\t", " ", "ﬁ", "ﬂ", "ﬀ", "ﬃ", "ﬄ", "ﬅ", "ﬆ", "'"]
+        list("abcXYZ 09.-")
+        + ["\n", "\r", "\t", " ", "ﬁ", "ﬂ", "ﬀ", "ﬃ", "ﬄ", "ﬅ", "ﬆ", "'"]
+        + ["é", "ß", "日", "\x0b", "\x1c"]
     ),
-    max_size=80,
+    max_size=200,
 )
 
 

@@ -5,8 +5,12 @@ no row loss)."""
 from __future__ import annotations
 
 import pandas as pd
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from janet_spark.extract.html_strip import looks_like_html, strip_html
+from janet_spark.extract.udfs import extract_batch
 from janet_spark.pipeline import extract_only
 from janet_spark.reassemble import reassemble_conversations
 
@@ -78,30 +82,28 @@ def test_null_columns_no_row_loss(spark):
     assert conv["all_ok"] == 0
 
 
+# one piece of tag soup: random markup characters or a tricky literal
+TAG_SOUP_FRAGMENT = st.one_of(
+    st.text(alphabet="ab<> /=\"'\n\t-", max_size=12),
+    st.sampled_from(
+        [
+            "<div>", "</div>", "<p>", "</p>", "<a href='#'>", "</a>",
+            "<nav>", "</nav>", "<br/>", "<b>", "</b>", "<<>>", "</",
+            "<!-- c -->", "<![CDATA[x]]>", "<!doctype html>", "text",
+            "<p", "p>", "<a<b>", "</a></a></nav>", "<style>x</style>",
+        ]
+    ),
+)
+TAG_SOUP = st.lists(TAG_SOUP_FRAGMENT, max_size=20).map("".join)
+
+
 def test_html_strip_tag_soup_never_crashes_and_spans_in_bounds():
     """Property: strip_html is total over arbitrary tag soup — no crash,
     spans inside the payload, counts consistent."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from janet_spark.extract.html_strip import strip_html
-
-    fragment = st.one_of(
-        st.text(alphabet="ab<> /=\"'\n\t-", max_size=12),
-        st.sampled_from(
-            [
-                "<div>", "</div>", "<p>", "</p>", "<a href='#'>", "</a>",
-                "<nav>", "</nav>", "<br/>", "<b>", "</b>", "<<>>", "</",
-                "<!-- c -->", "<![CDATA[x]]>", "<!doctype html>", "text",
-                "<p", "p>", "<a<b>", "</a></a></nav>", "<style>x</style>",
-            ]
-        ),
-    )
 
     @settings(max_examples=300, deadline=None)
-    @given(st.lists(fragment, max_size=20))
-    def check(parts):
-        payload = "".join(parts)
+    @given(TAG_SOUP)
+    def check(payload):
         text, spans, kept, dropped = strip_html(payload)
         assert isinstance(text, str)
         assert kept == len(spans)
@@ -109,5 +111,29 @@ def test_html_strip_tag_soup_never_crashes_and_spans_in_bounds():
         for s, e, kind in spans:
             assert kind == "main"
             assert 0 <= s <= e <= len(payload)
+
+    check()
+
+
+def test_extract_batch_html_rows_match_strip_html():
+    """Property: the batch HTML path, which canonicalizes every block of
+    every HTML row in one vectorized pass, equals the scalar strip_html
+    composition row by row."""
+
+    @settings(max_examples=60, deadline=None)
+    @given(st.lists(TAG_SOUP, min_size=1, max_size=24))
+    def check(payloads):
+        pdf = pd.DataFrame(
+            {"conv_id": "c", "turn_idx": range(len(payloads)), "text": payloads, "tool": ""}
+        )
+        out = extract_batch(pdf)
+        for payload, row in zip(payloads, out.itertuples()):
+            if not looks_like_html(payload):
+                continue
+            text, spans, kept, dropped = strip_html(payload)
+            assert row.extracted_text == text
+            assert [(d["start"], d["end"], d["kind"]) for d in row.spans] == spans
+            assert (row.blocks_kept, row.blocks_dropped) == (kept, dropped)
+            assert row.ok == bool(text)
 
     check()

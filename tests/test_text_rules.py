@@ -29,6 +29,7 @@ CASES = [
     ("l1   \n   l2\n\n\n\n\nl3", "l1\nl2\n\nl3"),
     ("", ""),
     ("X-\n9 digit hyphen kept", "X-\n9 digit hyphen kept"),
+    ("caf\u00e9-\nx", "caf\u00e9-\nx"),  # [A-Za-z] is ASCII: hyphen after \u00e9 kept
 ]
 
 
