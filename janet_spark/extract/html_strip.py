@@ -33,12 +33,14 @@ from janet_spark.extract.text_rules import canonicalize_str
 
 # groups: the whole token, then (for an element tag) the closing slash, the
 # name and the self-closing slash, so TOKEN_RE.split yields text and tokens
-# in one C-level pass
+# in one C-level pass. The attribute loop takes a '/' only when more than
+# whitespace follows it before '>', so `<iframe src="a"/>` self-closes.
 TOKEN_RE = re.compile(
     r"(<!--.*?-->"  # comment
     r"|<!\[CDATA\[.*?\]\]>"  # cdata
     r"|<![^>]*>"  # doctype / declaration
-    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:-]*)(?:\"[^\"]*\"|'[^']*'|[^>\"'])*(/?)\s*>)",
+    r"|<\s*(/?)\s*([a-zA-Z][a-zA-Z0-9:-]*)"
+    r"(?:\"[^\"]*\"|'[^']*'|[^>\"'/]|/(?!\s*>))*(/?)\s*>)",
     re.S,
 )
 

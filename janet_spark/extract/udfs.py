@@ -143,7 +143,9 @@ def extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             "role": (
                 pdf["role"].to_numpy() if "role" in pdf else np.full(n, "", dtype=object)
             ),
-            "ts": pdf["ts"].to_numpy() if "ts" in pdf else np.full(n, None, dtype=object),
+            # the column's own array: to_numpy() on a tz-aware column
+            # builds one Timestamp object per row
+            "ts": pdf["ts"].array if "ts" in pdf else np.full(n, None, dtype=object),
             "extracted_text": extracted,
             "spans": spans,
             "blocks_kept": kept,

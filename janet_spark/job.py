@@ -4,7 +4,7 @@
         --input /path/to/transcripts \
         --output /path/to/output \
         [--mode extract|sft] \
-        [--input-format parquet|orc|json|csv] [--n-buckets 256] [--write-salt 4]
+        [--input-format parquet|orc|json|csv] [--n-buckets 256]
 
 ``--mode extract`` (default) runs the per-bucket checkpointed extraction
 job (pipeline.run_job); ``--mode sft`` builds the packed-training-data
@@ -34,12 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     p.add_argument("--output", required=True, help="output root (data + lineage)")
     p.add_argument("--n-buckets", type=int, default=256)
-    p.add_argument(
-        "--write-salt",
-        type=int,
-        default=4,
-        help="files per checkpoint bucket (conv-level write salt)",
-    )
     p.add_argument("--run-id", default=None)
     p.add_argument("--mode", default="extract", choices=["extract", "sft"])
     p.add_argument(
@@ -81,7 +75,6 @@ def main(argv: list[str] | None = None) -> int:
         args.output,
         run_id=args.run_id,
         n_buckets=args.n_buckets,
-        write_salt=args.write_salt,
     )
     elapsed = time.time() - t0
     print(

@@ -23,10 +23,16 @@ Scale notes:
   Measured on a 32-core box, dropping the pre-extract repartition removed
   a full input-sized shuffle and most of the system-CPU burn that capped
   8->32-core scaling.
-* Skew handling lives where keys first meet: the write path buckets by
-  ``pmod(xxhash64(conv_id), n_buckets)`` with a conv-level write salt, and
-  reassembly uses a two-level chunked concat (contiguous ``turn_idx div
-  CHUNK`` ranges — order-preserving salting; see reassemble.py).
+* The write path shuffles once, on the checkpoint bucket
+  ``pmod(xxhash64(conv_id), n_buckets)``: each bucket is written by one
+  reducer as one file, so write parallelism is at most ``n_buckets`` (hash
+  partitioning can put several buckets on one reducer). Skew inside a
+  conversation is handled where turns are grouped, by reassembly's
+  two-level chunked concat (contiguous ``turn_idx div CHUNK`` ranges —
+  order-preserving salting; see reassemble.py).
+* Lineage stats cost one column-pruned ``groupBy("part_bucket")`` pass
+  over the staged output, which is exact under speculation and stage
+  retries. A rerun with every bucket done launches no Spark job.
 """
 
 from __future__ import annotations
@@ -42,9 +48,6 @@ from janet_spark.extract.udfs import EXTRACT_OUTPUT_DDL, extract_turns_iter
 from janet_spark.reassemble import reassemble_conversations
 
 N_CHECKPOINT_BUCKETS = 32
-# files written per checkpoint bucket: spreads a bucket's write across
-# several reducers (and yields multiple parquet files per bucket dir)
-WRITE_SALT = 4
 
 
 def extract_only(transcripts: DataFrame) -> DataFrame:
@@ -63,7 +66,6 @@ def run_job(
     output_path: str,
     run_id: str | None = None,
     n_buckets: int = N_CHECKPOINT_BUCKETS,
-    write_salt: int = WRITE_SALT,
     fail_after_n_buckets: int | None = None,
 ) -> dict:
     """Checkpointed batch run: resumable, two-phase-committed, with
@@ -83,11 +85,12 @@ def run_job(
     done = ckpt.completed_buckets(spark, output_path)
     work = ckpt.resume_filter(work, done)
 
-    # fully-resumed rerun: nothing to stage — skip the write entirely
-    # (Observation.get has no metrics row when zero tasks ran, and an empty
-    # staged write would commit nothing anyway). isEmpty() short-circuits
-    # on the first row found, so this probe is cheap at any scale.
-    if work.isEmpty():
+    # every bucket done: nothing can be staged, which the lineage alone
+    # shows, without a Spark job. Any other input runs the staged write,
+    # even when all its rows fall in done buckets; that write stages no
+    # bucket dir, so the commit below publishes nothing and removes the
+    # staging dir.
+    if len(done) == n_buckets:
         summary = {
             "run_id": run_id,
             "phase": "committed",
@@ -104,45 +107,14 @@ def run_job(
         work.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
     ).withColumn("part_bucket", ckpt.partition_bucket("conv_id", n_buckets))
 
-    # per-bucket stats ride the write job itself via observe() — no second
-    # scan over the staged output (at 100 TB the old re-read was a full
-    # extra pass). Observation metrics are global aggregates, so the
-    # per-bucket split is pivoted into 2*n_buckets conditional sums —
-    # bounded by the constant bucket count, merged map-side like any
-    # partial agg. CAVEAT: accumulator-backed metrics drop FAILED task
-    # attempts but can double-count under SPECULATIVE execution (two
-    # successful attempts of one task), so when speculation is on we fall
-    # back to the exact post-write aggregation — stats feed lineage
-    # reporting only (resume keys off row presence, never these counts),
-    # but they should still be exact whenever the engine can promise it.
-    speculative = (
-        spark.conf.get("spark.speculation", "false").lower() == "true"
-    )
-    from pyspark.sql import Observation
-
-    obs = Observation(f"bucket_stats_{run_id}")
-    metric_exprs = []
-    for b in range(n_buckets):
-        metric_exprs.append(
-            F.sum(F.when(F.col("part_bucket") == b, 1).otherwise(0)).alias(f"t{b}")
-        )
-        metric_exprs.append(
-            F.sum(
-                F.when(F.col("part_bucket") == b, F.col("ok").cast("long")).otherwise(0)
-            ).alias(f"o{b}")
-        )
-
     staging = commit.staging_path(output_path, run_id)
-    to_write = extracted if speculative else extracted.observe(obs, *metric_exprs)
     (
-        to_write
-        # one shuffle keyed on (bucket, conv-salt): co-locates each bucket
-        # into at most WRITE_SALT files while keeping a conversation in one
-        # file; replaces the old full-input pre-extract shuffle
-        .repartition(
-            F.col("part_bucket"),
-            F.pmod(F.xxhash64("conv_id"), F.lit(write_salt)),
-        )
+        extracted
+        # one shuffle keyed on the bucket: each bucket lands in one reducer
+        # and one file, so at most n_buckets reducers write and a
+        # conversation stays in one file. Skew inside a conversation is
+        # reassembly's concern (its turn_idx div CHUNK salting).
+        .repartition("part_bucket")
         # sort within each write task: costs one in-memory sort per
         # reducer, buys (a) tight per-row-group min/max stats on conv_id,
         # so downstream point reads of one conversation prune row groups
@@ -158,54 +130,29 @@ def run_job(
         .parquet(staging)
     )
 
-    def exact_bucket_stats() -> dict:
-        # exact fallback: one column-pruned pass over the staged output
-        stats_rows = (
-            spark.read.schema(extracted.schema)
-            .parquet(staging)
-            .groupBy("part_bucket")
-            .agg(
-                F.count(F.lit(1)).alias("n_turns"),
-                F.sum(F.col("ok").cast("long")).alias("n_ok"),
-            )
-            .collect()
+    # per-bucket lineage stats: one column-pruned pass over what was
+    # written (the partition value and `ok`). Counting the staged rows, not
+    # what tasks reported, keeps them exact under speculation and stage
+    # retries. They are reporting only: resume keys off which buckets have
+    # a success row, never these counts.
+    stats_rows = (
+        spark.read.schema(extracted.schema)
+        .parquet(staging)
+        .groupBy("part_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.sum(F.col("ok").cast("long")).alias("n_ok"),
         )
-        return {
-            int(r["part_bucket"]): {
-                "n_turns": int(r["n_turns"]),
-                "n_ok": int(r["n_ok"]),
-                "started_at": started,
-            }
-            for r in stats_rows
+        .collect()
+    )
+    bucket_stats = {
+        int(r["part_bucket"]): {
+            "n_turns": int(r["n_turns"]),
+            "n_ok": int(r["n_ok"]),
+            "started_at": started,
         }
-
-    if speculative:
-        bucket_stats = exact_bucket_stats()
-    else:
-        metrics = obs.get  # blocks until the write action reports
-        # sums are NULL when zero rows flowed -> `or 0`
-        bucket_stats = {
-            b: {
-                "n_turns": int(metrics[f"t{b}"] or 0),
-                "n_ok": int(metrics[f"o{b}"] or 0),
-                "started_at": started,
-            }
-            for b in range(n_buckets)
-            if int(metrics[f"t{b}"] or 0) > 0
-        }
-        # Speculation isn't the only way accumulator metrics double-count:
-        # a STAGE RE-ATTEMPT (e.g. shuffle fetch failure on a real cluster)
-        # re-runs already-successful tasks and their observe() sums merge
-        # twice. Cross-check the observed total against the staged row
-        # count — parquet count() is metadata-only (footer row counts, no
-        # data scan), so this probe is cheap at any scale — and fall back
-        # to the exact per-bucket aggregation on any mismatch. Resume is
-        # unaffected either way (it keys off row presence, not counts);
-        # this keeps the lineage stats exact whenever they are published.
-        observed_total = sum(s["n_turns"] for s in bucket_stats.values())
-        staged_total = spark.read.schema(extracted.schema).parquet(staging).count()
-        if observed_total != staged_total:
-            bucket_stats = exact_bucket_stats()
+        for r in stats_rows
+    }
 
     ckpt.backup_manifest(
         output_path,

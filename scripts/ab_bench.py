@@ -14,7 +14,10 @@ an uncommitted tree, pass the commit printed by ``git stash create``.
 
 For every end-to-end metric in REV_A's BENCHMARK.json this prints each
 side's median and quartiles, the share of pairs B wins, and A's quartile
-width, plus the worst ``failed_ops_ratio`` of each side. The exports are
+width, plus the worst ``failed_ops_ratio`` of each side. A second table gives
+each side's median of the run stamp's ``resume_s`` and ``iterations``
+(``job_resume``) and ``passes`` (``extract_mix``), which show which timed
+step moved and how many iterations fit in the run. The exports are
 removed on exit, also on Ctrl-C or SIGTERM. Standard library only.
 """
 
@@ -31,6 +34,8 @@ import sys
 import tempfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# figures of the run stamp that only some workloads report
+STAMP_FIGURES = ("resume_s", "iterations", "passes")
 
 
 def parse_seeds(spec: str) -> list[int]:
@@ -63,7 +68,8 @@ def run_once(tree: str, workload: str, seed: int, seconds: float) -> dict:
         raise RuntimeError(f"{tree}: {workload} seed {seed} exited {out.returncode}")
     stamp, result = json.loads(lines[-2]), json.loads(lines[-1])
     got = {k: v["value"] for k, v in result["metrics"].items()}
-    got["failed_ops_ratio"] = stamp["named"]["failed_ops_ratio"]
+    got.update((k, stamp["named"][k]) for k in ("failed_ops_ratio", *STAMP_FIGURES)
+               if k in stamp["named"])
     return got
 
 
@@ -83,6 +89,13 @@ def summarize(metrics: list[dict], runs: dict) -> None:
                   f"| {mb:,.2f} [{qb[0]:,.2f}, {qb[2]:,.2f}] | {mb / ma:.3f} "
                   f"| {wins}/{len(pairs)} | {qa[2] - qa[0]:,.2f} "
                   f"| {worst[0]:.3g}/{worst[1]:.3g} |")
+    print("\n| workload | stamp figure | A median | B median |")
+    print("|---|---|---|---|")
+    for workload, pairs in runs.items():
+        for k in STAMP_FIGURES:
+            if all(k in p[s] for p in pairs for s in "AB"):
+                a, b = (statistics.median(p[s][k] for p in pairs) for s in "AB")
+                print(f"| {workload} | {k} | {a:,.2f} | {b:,.2f} |")
 
 
 def main(argv: list[str] | None = None) -> int:

@@ -4,6 +4,8 @@ kill-and-restart resume (SURVEY.md §5 test plan items b/d/e)."""
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -128,6 +130,95 @@ def test_resume_after_injected_failure(spark, fixtures, tmp_path):
         .reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(resumed, golden)
+
+
+def _staging_dirs(out_dir: str) -> list[str]:
+    return [d for d in os.listdir(out_dir) if d.startswith("_staging_")]
+
+
+def test_lineage_stats_equal_committed_output_after_resume(spark, fixtures, tmp_path):
+    """Lineage n_turns/n_ok of every bucket, written partly by a crashed
+    run and partly by its resume, equal a groupBy over the committed
+    output; each committed bucket dir holds one file."""
+    import pyarrow.parquet as pq
+
+    tdf, expected = fixtures
+    out_dir = str(tmp_path / "out")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_job(spark, tdf, out_dir, n_buckets=8, fail_after_n_buckets=3)
+    run_job(spark, tdf, out_dir, n_buckets=8)
+
+    lineage = pq.read_table(ckpt.lineage_dir(out_dir)).to_pandas()
+    assert (lineage["status"] == "success").all()
+    assert lineage["part_bucket"].is_unique
+    got = {int(r.part_bucket): (r.n_turns, r.n_ok) for r in lineage.itertuples()}
+    want = {
+        r["part_bucket"]: (r["n_turns"], r["n_ok"])
+        for r in read_output(spark, out_dir)
+        .groupBy("part_bucket")
+        .agg(
+            F.count(F.lit(1)).alias("n_turns"),
+            F.sum(F.col("ok").cast("long")).alias("n_ok"),
+        )
+        .collect()
+    }
+    assert got == want
+    assert sum(t for t, _ in got.values()) == len(expected)
+    assert sum(o for _, o in got.values()) == int(expected["ok"].sum())
+
+    ddir = ckpt.data_dir(out_dir)
+    for name in os.listdir(ddir):
+        files = [f for f in os.listdir(os.path.join(ddir, name)) if f.endswith(".parquet")]
+        assert len(files) == 1, (name, files)
+
+
+def test_input_touching_few_buckets_commits_only_those(spark, fixtures, tmp_path):
+    """Only the buckets an input touches are committed; a rerun of it and
+    an empty input run a staged write that commits nothing and leaves no
+    staging dir."""
+    tdf, _ = fixtures
+    out_dir = str(tmp_path / "out")
+    convs = sorted(r[0] for r in tdf.select("conv_id").distinct().collect())[:2]
+    part = tdf.filter(F.col("conv_id").isin(convs))
+    touched = {
+        r[0] for r in part.select(ckpt.partition_bucket("conv_id", 16)).distinct().collect()
+    }
+
+    first = run_job(spark, part, out_dir, n_buckets=16)
+    assert set(first["buckets_committed"]) == touched
+    assert set(os.listdir(ckpt.data_dir(out_dir))) == {f"part_bucket={b}" for b in touched}
+    assert not _staging_dirs(out_dir)
+
+    for again in (part, part.limit(0)):
+        s = run_job(spark, again, out_dir, n_buckets=16)
+        assert s["buckets_committed"] == [] and s["n_turns"] == 0
+        assert set(s["resumed_skipping_buckets"]) == touched
+        assert not _staging_dirs(out_dir)
+    assert set(os.listdir(ckpt.data_dir(out_dir))) == {f"part_bucket={b}" for b in touched}
+    assert set(ckpt.completed_buckets(spark, out_dir)) == touched
+
+
+def test_rerun_with_every_bucket_done_launches_no_spark_job(spark, fixtures, tmp_path):
+    # read from files: a probe over an in-memory frame is evaluated
+    # locally and would launch no job either way
+    src = str(tmp_path / "in")
+    fixtures[0].write.parquet(src)
+    tdf = spark.read.parquet(src)
+    out_dir = str(tmp_path / "out")
+    assert len(run_job(spark, tdf, out_dir, n_buckets=2)["buckets_committed"]) == 2
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def job_ids() -> set[int]:
+        # the status store is fed by the async listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup())
+
+    before = job_ids()
+    s = run_job(spark, tdf, out_dir, n_buckets=2)
+    assert job_ids() == before
+    assert s["buckets_committed"] == [] and s["resumed_skipping_buckets"] == [0, 1]
 
 
 def test_failed_rows_flagged_not_dropped(spark, fixtures):

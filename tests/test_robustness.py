@@ -115,6 +115,29 @@ def test_html_strip_tag_soup_never_crashes_and_spans_in_bounds():
     check()
 
 
+def test_extract_batch_passes_ts_through_by_position():
+    """`ts` comes out as the input column's values in row order, dtype
+    kept: tz-aware, with NULLs, under a non-default index."""
+    ts = pd.Series(
+        [pd.Timestamp("2024-01-01 10:00", tz="UTC"), pd.NaT,
+         pd.Timestamp("2024-03-05 23:59:59.123456", tz="UTC")],
+        index=[7, 3, 11],
+    )
+    naive = ts.dt.tz_localize(None)
+    for col in (ts, naive, pd.Series([None, None, None], index=[7, 3, 11], dtype=object)):
+        pdf = pd.DataFrame(
+            {"conv_id": "c", "turn_idx": [0, 1, 2], "role": "user",
+             "text": ["a", "b", "c"], "tool": "", "ts": col},
+            index=col.index,
+        )
+        out = extract_batch(pdf)
+        assert out["ts"].dtype == col.dtype
+        assert list(out.index) == [0, 1, 2]
+        pd.testing.assert_series_equal(
+            out["ts"], col.reset_index(drop=True), check_names=False
+        )
+
+
 def test_extract_batch_html_rows_match_strip_html():
     """Property: the batch HTML path, which canonicalizes every block of
     every HTML row in one vectorized pass, equals the scalar strip_html

@@ -153,6 +153,22 @@ def test_text_after_closing_boilerplate_is_body_content():
     assert kept == 2 and dropped == 1
 
 
+def test_self_closed_tag_equals_explicit_close():
+    # regression: the attribute loop of the tag regex took the '/' of
+    # `<iframe src="a"/>`, so the tag parsed as an open boilerplate scope
+    # and every later block was dropped
+    body = "<p>Real content here is long enough.</p></body>"
+    for tag in ("iframe", "script", "nav", "span", "div"):
+        self_closed = f'<body><{tag} src="a"/>' + body
+        explicit = f'<body><{tag} src="a"></{tag}>' + body
+        got, want = strip_html(self_closed), strip_html(explicit)
+        assert got[0] == want[0] == "Real content here is long enough.", tag
+        assert got[2:] == want[2:] == (1, 0), tag
+        assert [self_closed[s:e] for s, e, _ in got[1]] == [
+            explicit[s:e] for s, e, _ in want[1]
+        ], tag
+
+
 def test_br_produces_line_break():
     # regression: <br> used to degrade to ' ' via add_text's whitespace
     # guard; it must survive as a line separator
