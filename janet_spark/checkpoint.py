@@ -227,11 +227,11 @@ _last_run_ns = 0
 def new_run_id() -> str:
     """Strictly monotonic run id: lexicographic order == creation order.
 
-    Generation readers (dedup_incremental.read_census /
-    read_cluster_assignments) resolve "latest" as the lexicographic max of
-    gen=<run_id> dirs, so two runs in the same second must not tie-break on
-    random hex (the older snapshot could shadow the newer). Nanosecond time
-    has a fixed 19-digit width until ~2262 so lexicographic == numeric, and
+    Snapshot tables (the `latest` merge of janet_spark.maintained)
+    resolve "latest" as the lexicographic max of gen=<run_id> dirs, so
+    two runs in the same second must not tie-break on random hex (the
+    older snapshot could shadow the newer). Nanosecond time has a fixed
+    19-digit width until ~2262 so lexicographic == numeric, and
     the process-local monotonic guard breaks same-nanosecond ties; legacy
     10-digit-seconds ids sort before any ns id with the same prefix
     ('-' < digit), so mixed directories stay correctly ordered."""

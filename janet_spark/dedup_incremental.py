@@ -17,10 +17,9 @@ Scale shape (the 100 TB story):
   small, so AQE broadcasts them into the join against the full band table;
   corpus x corpus pairs are structurally impossible to emit.
 - Generations are immutable parquet dirs published whole by
-  `commit.write_generation`: a crashed run is invisible to readers and
+  `maintained.append`: a crashed run is invisible to readers and
   re-running is idempotent. Many small daily generations are exactly the
-  small-files problem compaction.py exists for — compact generations
-  periodically with it.
+  small-files problem `maintained.compact_generations` exists for.
 - Pair mining is materialized BEFORE the generation commits: if the run
   dies in between, the retry re-signs the same delta and re-finds the same
   pairs; committing first would silently absorb the delta into the corpus
@@ -29,62 +28,37 @@ Scale shape (the 100 TB story):
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from janet_spark.checkpoint import new_run_id
-from janet_spark.commit import (
-    generation_dirs,
-    live_generation_dirs,
-    publish,
-    staged,
-    write_generation,
+from janet_spark.maintained import (
+    Spec,
+    append,
+    dedup_on,
+    distinct,
+    latest,
+    maintained,
+    sum_on,
 )
 from janet_spark.queries_text import (
     _LSH_HOT_BUCKET_CAP,
     _band_df,
+    _dsir_feature_occurrences,
     _verify_candidates,
     connected_components,
 )
 
-SIG_SCHEMA = "doc_id long, band_key long"
-CLUSTER_SCHEMA = "doc_id long, cluster_rep long"
-
-
-def read_signature_table(spark: SparkSession, sig_path: str) -> DataFrame | None:
-    """Union of all committed LIVE generations; None if the table doesn't
-    exist yet. `_staging_*` dirs from crashed runs are never listed, and
-    generations absorbed by a committed compaction are skipped even if
-    their dirs still linger (crash mid-cleanup)."""
-    gens = live_generation_dirs(sig_path)
-    if not gens:
-        return None
-    return spark.read.schema(SIG_SCHEMA).parquet(*gens)
-
-
-PAIRS_SCHEMA = "d1 long, d2 long, jaccard double"
-
-
-def read_pairs_table(spark: SparkSession, pairs_path: str) -> DataFrame | None:
-    """Union of all committed pair generations — the standing verified
-    near-dup pair table the health reports read instead of re-mining
-    (round-3 verdict #3). `.distinct()` because a run that crashed between
-    its pair commit and its signature commit re-mines the same delta on
-    retry and re-commits the same pairs under a new generation id; pairs
-    are canonical (d1 < d2, deterministic jaccard), so the dedupe is
-    exact. The pair table scales with the duplicate population, orders of
-    magnitude below the corpus, so the distinct is cheap at any scale."""
-    gens = live_generation_dirs(pairs_path)
-    if not gens:
-        return None
-    return spark.read.schema(PAIRS_SCHEMA).parquet(*gens).distinct()
-
-
-EXACT_CENSUS_SCHEMA = "kk string, source string, n long"
+SIGNATURES = Spec("doc_id long, band_key long")
+CLUSTERS = Spec("doc_id long, cluster_rep long", merge=latest)
+# distinct: a run that crashed between its pair commit and its signature
+# commit re-mines the same delta on retry and re-commits the same pairs
+# under a new generation id; pairs are canonical (d1 < d2, deterministic
+# jaccard), so the dedupe is exact and costs a table sized by the
+# duplicate population
+PAIRS = Spec("d1 long, d2 long, jaccard double", merge=distinct)
 
 
 def exact_census_of(docs: DataFrame) -> DataFrame:
@@ -99,34 +73,11 @@ def exact_census_of(docs: DataFrame) -> DataFrame:
     )
 
 
-def read_exact_census(spark: SparkSession, census_path: str) -> DataFrame | None:
-    """Sum the per-generation counts into the live (kk, source, n) view.
-    Generations are disjoint deltas, so SUM (not last-snapshot-wins) is
-    the merge; `compact_generations` applies unchanged because reads
-    re-aggregate whatever union of generations survives compaction."""
-    gens = live_generation_dirs(census_path)
-    if not gens:
-        return None
-    return (
-        spark.read.schema(EXACT_CENSUS_SCHEMA)
-        .parquet(*gens)
-        .groupBy("kk", "source")
-        .agg(F.sum("n").alias("n"))
-    )
-
-
-def incremental_exact_census_run(
-    delta_docs: DataFrame, census_path: str, run_id: str
-) -> str:
-    """Daily exact-dup census maintenance: census ONLY the delta and
-    append one committed generation (gen=<run_id>, published whole; a
-    replay replaces it) — the daily report then reads a table sized by the
-    key population instead of md5-scanning the corpus per report (round-4
-    verdict "What's wrong" #2)."""
-    return write_generation(exact_census_of(delta_docs), census_path, run_id)
-
-
-LINE_CENSUS_SCHEMA = "line_sig string, n_docs long"
+EXACT_CENSUS = Spec(
+    "kk string, source string, n long",
+    of=exact_census_of,
+    merge=sum_on("kk", "source"),
+)
 
 
 def line_census_of(lines: DataFrame) -> DataFrame:
@@ -140,34 +91,9 @@ def line_census_of(lines: DataFrame) -> DataFrame:
     )
 
 
-def read_line_census(spark: SparkSession, census_path: str) -> DataFrame | None:
-    """Sum the per-generation counts into the live (line_sig, n_docs)
-    view. Same contract as `read_exact_census`: generations are disjoint
-    deltas so SUM is the merge, and `compact_generations` applies
-    unchanged because reads re-aggregate whatever union survives."""
-    gens = live_generation_dirs(census_path)
-    if not gens:
-        return None
-    return (
-        spark.read.schema(LINE_CENSUS_SCHEMA)
-        .parquet(*gens)
-        .groupBy("line_sig")
-        .agg(F.sum("n_docs").alias("n_docs"))
-    )
-
-
-def incremental_line_census_run(
-    delta_lines: DataFrame, census_path: str, run_id: str
-) -> str:
-    """Daily line-census maintenance: census ONLY the delta's lines and
-    append one committed generation (gen=<run_id>, published whole; a
-    replay replaces it) — the daily boilerplate rewrite then reads a table
-    sized by the distinct-line population instead of re-censusing the
-    corpus."""
-    return write_generation(line_census_of(delta_lines), census_path, run_id)
-
-
-DSIR_COUNTS_SCHEMA = "bucket int, ct long, cr long"
+LINE_CENSUS = Spec(
+    "line_sig string, n_docs long", of=line_census_of, merge=sum_on("line_sig")
+)
 
 
 def dsir_counts_of(occ: DataFrame) -> DataFrame:
@@ -184,49 +110,21 @@ def dsir_counts_of(occ: DataFrame) -> DataFrame:
     )
 
 
-def read_dsir_counts(spark: SparkSession, counts_path: str) -> DataFrame | None:
-    """Sum the per-generation target/raw bucket counts into the live
-    classifier table (≤ bucket-space rows regardless of corpus size)."""
-    gens = live_generation_dirs(counts_path)
-    if not gens:
-        return None
-    return (
-        spark.read.schema(DSIR_COUNTS_SCHEMA)
-        .parquet(*gens)
-        .groupBy("bucket")
-        .agg(F.sum("ct").alias("ct"), F.sum("cr").alias("cr"))
-    )
+# a day's delta is its documents; the table is a <= bucket-space summary
+DSIR_COUNTS = Spec(
+    "bucket int, ct long, cr long",
+    of=lambda docs: dsir_counts_of(_dsir_feature_occurrences(docs)),
+    merge=sum_on("bucket"),
+)
 
-
-def incremental_dsir_counts_run(
-    delta_occ: DataFrame, counts_path: str, run_id: str
-) -> str:
-    """Daily DSIR classifier maintenance: count ONLY the delta's hashed
-    features and append one committed generation — scoring today's crawl
-    reads a ≤ bucket-space table instead of re-featurizing the corpus."""
-    return write_generation(dsir_counts_of(delta_occ), counts_path, run_id)
-
-
-CENSUS_SCHEMA = "band_key long, bkt_n long, rep_doc long"
+# a delta changes existing rows, so each run writes a full snapshot
+CENSUS = Spec("band_key long, bkt_n long, rep_doc long", merge=latest)
 
 
 def _census_of(bands: DataFrame) -> DataFrame:
     return bands.groupBy("band_key").agg(
         F.count(F.lit(1)).alias("bkt_n"), F.min("doc_id").alias("rep_doc")
     )
-
-
-def read_census(spark: SparkSession, census_path: str) -> DataFrame | None:
-    """Latest committed census snapshot (full snapshot per run, like the
-    cluster assignments — a delta changes existing rows, so snapshots are
-    the unit of atomic replacement). run_ids embed monotonic epoch
-    nanoseconds (checkpoint.new_run_id), so lexicographic max is the
-    newest even for runs in the same second; 'bootstrap' sorts before
-    every run."""
-    gens = generation_dirs(census_path)
-    if not gens:
-        return None
-    return spark.read.schema(CENSUS_SCHEMA).parquet(gens[-1])
 
 
 def incremental_dedup_run(
@@ -259,24 +157,22 @@ def incremental_dedup_run(
     AFTER the signature generation: a crash in between leaves the census
     under-counting the committed delta, which can only bias buckets toward
     the cold (exact all-pairs) path, never toward a star's bounded-recall
-    trade. A signature table without a census (pre-census layout) is
-    self-healed by one full re-aggregation. The remaining full-table touch
-    is the cold join's build side; at production scale the signature table
-    is bucketed by band_key, making that join co-located with the
-    broadcast-sized delta probing it.
+    trade. A signature table without a census (pre-census layout, or a
+    crash between the two bootstrap commits) is self-healed by one full
+    re-aggregation, committed as the census's bootstrap snapshot. The
+    remaining full-table touch is the cold join's build side; at
+    production scale the signature table is bucketed by band_key, making
+    that join co-located with the broadcast-sized delta probing it.
     """
     run_id = new_run_id()
     census_path = os.path.join(sig_path, "census")
-    corpus_bands = read_signature_table(spark, sig_path)
-    if corpus_bands is None:
-        write_generation(_band_df(corpus_docs), sig_path, "bootstrap")
-        corpus_bands = read_signature_table(spark, sig_path)
-        write_generation(_census_of(corpus_bands), census_path, "bootstrap")
+    corpus_bands = maintained(
+        spark, SIGNATURES, sig_path, {"bootstrap": lambda: _band_df(corpus_docs)}
+    )
+    old_census = maintained(
+        spark, CENSUS, census_path, {"bootstrap": lambda: _census_of(corpus_bands)}
+    )
     delta_bands = _band_df(delta_docs).persist()
-
-    old_census = read_census(spark, census_path)
-    if old_census is None:
-        old_census = _census_of(corpus_bands)
     delta_census = delta_bands.groupBy("band_key").agg(
         F.count(F.lit(1)).alias("d_n"), F.min("doc_id").alias("d_rep")
     )
@@ -338,177 +234,27 @@ def incremental_dedup_run(
     # `pairs_path` the materialization IS the pair-generation commit, so
     # the maintained pair table the reports read stays in lockstep; a
     # crash after this commit but before the signature commit re-mines
-    # the same pairs on retry, which read_pairs_table dedupes.
+    # the same pairs on retry, which the PAIRS merge dedupes.
     if pairs_path is not None:
-        write_generation(pairs, pairs_path, run_id)
+        append(PAIRS, pairs, pairs_path, run_id)
     else:
         pairs.count()
-    write_generation(delta_bands, sig_path, run_id)
-    write_generation(
-        merged_census.select("band_key", "bkt_n", "rep_doc"), census_path, run_id
-    )
+    append(SIGNATURES, delta_bands, sig_path, run_id)
+    census = merged_census.select("band_key", "bkt_n", "rep_doc")
+    append(CENSUS, census, census_path, run_id)
     delta_bands.unpersist()
     return pairs, run_id
 
 
-def compact_generations(
-    spark: SparkSession,
-    table_path: str,
-    schema: str,
-    keep_latest: int = 3,
-    distinct: bool = False,
-) -> dict:
-    """Compact an ADDITIVE generation table (signatures, pairs): merge
-    every live generation older than the newest `keep_latest` into ONE
-    compacted generation — the daily-delta answer to the small-files
-    problem (one dir per day decays scan throughput the same way
-    per-micro-batch sinks do; compaction.py handles flat dirs, this
-    handles the gen= layout). Snapshot tables (census, clusters) never
-    need this: only their latest generation is live, so pruning old dirs
-    suffices.
-
-    Generations are disjoint for SIGNATURE tables (each run signs a
-    distinct delta), but NOT for pair tables: read_pairs_table documents
-    that a retry after a crash between the pair commit and the signature
-    commit re-commits identical pairs under a new generation, and reads
-    stay exact only through its `.distinct()`. Pass `distinct=True` when
-    compacting a pair table so the duplicates are squeezed out at
-    compaction instead of baked into the compacted generation (the verify
-    then compares DISTINCT counts, which is the exactness that actually
-    matters for those readers).
-
-    Verify-then-publish, tolerant of every crash window:
-    1. the union of the old generations is staged, with `_covered.json`
-       naming the absorbed generations;
-    2. row-count verify: staged == union of inputs (disjoint generations
-       make plain row parity exact; with `distinct=True` both sides are
-       distinct-counted, exact for the dedup-on-read contract);
-    3. one `commit.publish` commits the compacted generation — from that
-       instant readers SKIP the covered dirs (they'd double rows
-       otherwise), so the delete phase needs no atomicity;
-    4. covered dirs are deleted; a crash mid-delete leaves leftovers the
-       next read ignores and the next compaction sweeps.
-
-    Returns a summary dict. `keep_latest` newest generations stay
-    untouched so a same-day reader never races the compactor on the
-    generation a run is about to commit."""
-    live = live_generation_dirs(table_path)
-    # sweep covered leftovers from a previous crash-mid-delete
-    for g in set(generation_dirs(table_path)) - set(live):
-        shutil.rmtree(g, ignore_errors=True)
-    old = live[: -keep_latest] if keep_latest > 0 else live
-    if len(old) < 2:
-        return {"path": table_path, "compacted": False, "n_live": len(live)}
-
-    union = spark.read.schema(schema).parquet(*old)
-    if distinct:
-        union = union.distinct()
-    n_rows = union.count()
-    gen_id = f"compacted-{new_run_id()}"
-    with staged(table_path, gen_id) as staging:
-        union.coalesce(max(1, min(8, len(old)))).write.mode("overwrite").parquet(
-            staging
-        )
-        staged_rows = spark.read.schema(schema).parquet(staging).count()
-        if staged_rows != n_rows:
-            raise RuntimeError(
-                f"compaction verify failed: {staged_rows} staged != {n_rows}"
-            )
-        with open(os.path.join(staging, "_covered.json"), "w") as f:
-            json.dump(sorted(os.path.basename(g) for g in old), f)
-        publish(staging, os.path.join(table_path, f"gen={gen_id}"))
-    for g in old:
-        shutil.rmtree(g, ignore_errors=True)
-    return {
-        "path": table_path,
-        "compacted": True,
-        "n_absorbed": len(old),
-        "rows": n_rows,
-        "gen": gen_id,
-    }
-
-
-def prune_snapshots(table_path: str, keep_latest: int = 3) -> int:
-    """Delete all but the newest `keep_latest` generations of a SNAPSHOT
-    table (census, cluster assignments — readers only ever load the
-    latest, so old snapshots are retention, not data). Returns the number
-    of pruned generations."""
-    gens = generation_dirs(table_path)
-    to_drop = gens[:-keep_latest] if keep_latest > 0 else gens
-    for g in to_drop:
-        shutil.rmtree(g, ignore_errors=True)
-    return len(to_drop)
-
-
-def state_dir_for_input(sf_dir: str, file_name: str, state_name: str) -> str:
-    """Deterministic state directory for a registered (spark, sf_dir)
-    query that consumes maintained generations: keyed by a fingerprint of
-    the input parquet (realpath + size + mtime, per file for a
-    directory), so a REGENERATED input gets a fresh state dir rather
-    than stale state. Production jobs pass explicit state paths; this
-    exists so stateless query signatures can still exercise the
-    maintained read path.
-
-    Root is `$JANET_SPARK_STATE_DIR` when set (production: a durable
-    path — the world-shared OS temp dir is subject to periodic cleanup
-    that would silently discard the maintained table between runs and is
-    writable by every local user); the tempdir default stays for tests
-    and sandboxes. Concurrent-session commit races on a shared state dir
-    are handled at the commit layer (`commit.write_generation` stages
-    under a per-process unique name)."""
-    import hashlib
-    import tempfile
-
-    p = os.path.join(sf_dir, file_name)
-    st = os.stat(p)
-    parts = [os.path.realpath(p), str(st.st_size), str(st.st_mtime_ns)]
-    if os.path.isdir(p):
-        for name in sorted(os.listdir(p)):
-            s = os.stat(os.path.join(p, name))
-            parts += [name, str(s.st_size), str(s.st_mtime_ns)]
-    fp = hashlib.md5(":".join(parts).encode()).hexdigest()[:16]
-    root = os.environ.get("JANET_SPARK_STATE_DIR") or os.path.join(
-        tempfile.gettempdir(), "janet_spark_state"
-    )
-    return os.path.join(root, f"{state_name}_{fp}")
-
-
-CONV_SIG_SCHEMA = "conv_id string, sig array<long>"
-CONV_PAIRS_SCHEMA = "c1 string, c2 string, jaccard double"
-
-
-def read_conv_pairs_table(spark: SparkSession, pairs_path: str) -> DataFrame | None:
-    """Conversation-grain analogue of read_pairs_table (string ids)."""
-    gens = live_generation_dirs(pairs_path)
-    if not gens:
-        return None
-    return spark.read.schema(CONV_PAIRS_SCHEMA).parquet(*gens).distinct()
-
-
-def read_conv_signature_table(
-    spark: SparkSession, sig_path: str
-) -> DataFrame | None:
-    """Union of all live conversation-signature generations (conv_id,
-    sig: 64 minhash components). The conversation table stores FULL
-    signatures, not band keys: ~512 B/conversation buys both the band
-    derivation (a cheap vectorized mix per run) and the verify tail's
-    estimated-Jaccard prefilter — the corpus text is never re-signed.
-
-    Deduped by conv_id on read: an orchestrator that replays a run whose
-    signature generation already committed (crash after write_generation,
-    before the run was recorded as done) lands the same conv_ids in two
-    generations; signatures are deterministic functions of the transcript,
-    so keeping either row is exact, and without the dedup banding/census/
-    prefilter would see doubled signature rows and double-count candidates.
-    The table is ~512 B/conversation, so the shuffle is negligible."""
-    gens = live_generation_dirs(sig_path)
-    if not gens:
-        return None
-    return (
-        spark.read.schema(CONV_SIG_SCHEMA)
-        .parquet(*gens)
-        .dropDuplicates(["conv_id"])
-    )
+# The conversation table stores FULL signatures (64 minhash components),
+# not band keys: ~512 B/conversation buys both the band derivation and the
+# verify tail's estimated-Jaccard prefilter without re-signing text. An
+# orchestrator that replays a run whose signature generation already
+# committed lands the same conv_ids twice; signatures are deterministic,
+# so keeping either row is exact, and without the dedup banding, census
+# and prefilter would double-count candidates.
+CONV_SIGNATURES = Spec("conv_id string, sig array<long>", merge=dedup_on("conv_id"))
+CONV_PAIRS = Spec("c1 string, c2 string, jaccard double", merge=distinct)
 
 
 def incremental_conv_dedup_run(
@@ -541,7 +287,6 @@ def incremental_conv_dedup_run(
     materialize (or commit, with `pairs_path`) BEFORE the delta's
     signature generation lands, so a crashed run re-mines the same delta
     idempotently. Returns (verified delta-touching pairs, run_id)."""
-    from janet_spark.checkpoint import new_run_id
     from janet_spark.conversations import (
         _CONV_LSH_HOT_BUCKET_CAP,
         _conv_verify_candidates,
@@ -552,10 +297,9 @@ def incremental_conv_dedup_run(
     if hot_bucket_cap is None:
         hot_bucket_cap = _CONV_LSH_HOT_BUCKET_CAP
     run_id = new_run_id()
-    corpus_sigs = read_conv_signature_table(spark, sig_path)
-    if corpus_sigs is None:
-        write_generation(conv_sig_df(corpus_tr), sig_path, "bootstrap")
-        corpus_sigs = read_conv_signature_table(spark, sig_path)
+    corpus_sigs = maintained(
+        spark, CONV_SIGNATURES, sig_path, {"bootstrap": lambda: conv_sig_df(corpus_tr)}
+    )
     delta_sigs = conv_sig_df(delta_tr).persist()
     all_sigs = corpus_sigs.unionByName(delta_sigs).persist()
 
@@ -596,10 +340,10 @@ def incremental_conv_dedup_run(
     all_tr = corpus_tr.unionByName(delta_tr)
     pairs = _conv_verify_candidates(all_tr, candidates, sigs=all_sigs).persist()
     if pairs_path is not None:
-        write_generation(pairs, pairs_path, run_id)
+        append(CONV_PAIRS, pairs, pairs_path, run_id)
     else:
         pairs.count()
-    write_generation(delta_sigs, sig_path, run_id)
+    append(CONV_SIGNATURES, delta_sigs, sig_path, run_id)
     delta_sigs.unpersist()
     all_sigs.unpersist()
     return pairs, run_id
@@ -672,23 +416,7 @@ def update_cluster_assignments(
     # mining plan, so chaining lazy snapshots compounds the logical tree
     # until Catalyst chokes (observed as a tree-string stack overflow on
     # day 3 over real mining plans). The snapshot is a materialized daily
-    # artifact by contract — write_cluster_assignments persists it — so an
+    # artifact by contract — appended to a CLUSTERS table — so an
     # eager localCheckpoint here is the semantics, not a workaround; same
     # discipline as the connected_components loop.
     return out.localCheckpoint(eager=True)
-
-
-def read_cluster_assignments(spark: SparkSession, clu_path: str) -> DataFrame | None:
-    """Latest committed snapshot (each run writes a FULL snapshot, unlike
-    the additive signature generations — a merge can relabel an existing
-    cluster, so snapshots are the unit of atomic replacement). run_ids
-    embed monotonic epoch nanoseconds (checkpoint.new_run_id), so
-    lexicographic max is the newest even for same-second runs."""
-    gens = generation_dirs(clu_path)
-    if not gens:
-        return None
-    return spark.read.schema(CLUSTER_SCHEMA).parquet(gens[-1])
-
-
-def write_cluster_assignments(assign: DataFrame, clu_path: str, run_id: str) -> str:
-    return write_generation(assign, clu_path, run_id)

@@ -37,6 +37,8 @@ Scale notes:
 
 from __future__ import annotations
 
+import glob
+import os
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
@@ -134,16 +136,22 @@ def run_job(
     # written (the partition value and `ok`). Counting the staged rows, not
     # what tasks reported, keeps them exact under speculation and stage
     # retries. They are reporting only: resume keys off which buckets have
-    # a success row, never these counts.
+    # a success row, never these counts. The read names the bucket dirs,
+    # not the `_`-prefixed staging root, which Spark would report as an
+    # ignored path; a write that staged no bucket has nothing to read.
+    buckets = os.path.join(staging, "part_bucket=*")
     stats_rows = (
         spark.read.schema(extracted.schema)
-        .parquet(staging)
+        .option("basePath", staging)
+        .parquet(buckets)
         .groupBy("part_bucket")
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.sum(F.col("ok").cast("long")).alias("n_ok"),
         )
         .collect()
+        if glob.glob(buckets)
+        else []
     )
     bucket_stats = {
         int(r["part_bucket"]): {

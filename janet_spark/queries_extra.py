@@ -37,6 +37,7 @@ from janet_spark.extract.spans import (
     normalize_keyword,
     normalize_single_keyword,
 )
+from janet_spark.maintained import Spec, maintained, state_dir_for_input
 from janet_spark.queries_relational import t
 
 # ---------------------------------------------------------------------------
@@ -1450,6 +1451,13 @@ def ivf_assign_frame(emb, cent, spill: int = 1):
     return emb.mapInPandas(assign, schema=IVF_INDEX_SCHEMA)
 
 
+# Daily index maintenance assigns ONLY the delta vectors against the FIXED
+# centroid set the index was trained with and appends one generation of
+# `ivf_assign_frame` rows; the index never rebuilds over the old corpus.
+# Days are disjoint by construction, so the merge is a plain union.
+IVF_INDEX = Spec(IVF_INDEX_SCHEMA)
+
+
 def _ivf_probe_frame(query_vectors, cent, n_probes):
     """(qid, cell, cell_rank, q_embedding): each query vector's
     `n_probes` nearest centroid cells by cosine (ties (cs desc, cid
@@ -1563,18 +1571,13 @@ def q_ann_ivf_topk_indexed(spark, sf_dir):
     table refreshed by the daily delta (new vectors assign in the delta
     job and append as a generation). Output identical to `ann_ivf_topk`
     (same oracle)."""
-    import os
-
-    from janet_spark.commit import live_generation_dirs, write_generation
-    from janet_spark.dedup_incremental import state_dir_for_input
-
     emb = t(spark, sf_dir, "embeddings")
     cent = ivf_centroids(emb)
-    idx_path = state_dir_for_input(sf_dir, "embeddings.parquet", "ivf_index")
-    if not live_generation_dirs(idx_path):
-        write_generation(ivf_assign_frame(emb, cent), idx_path, "bootstrap")
-    assigned = spark.read.schema(IVF_INDEX_SCHEMA).parquet(
-        *live_generation_dirs(idx_path)
+    assigned = maintained(
+        spark,
+        IVF_INDEX,
+        state_dir_for_input(sf_dir, "embeddings.parquet", "ivf_index"),
+        {"bootstrap": lambda: ivf_assign_frame(emb, cent)},
     )
     return _ivf_search(emb, assigned, cent)
 
@@ -1604,21 +1607,6 @@ def q_ann_ivf_topk_spill(spark, sf_dir):
 _IVF_DELTA_MOD = 5  # registered-query stand-in for "today's new vectors"
 
 
-def incremental_ivf_index_run(emb_delta, cent, idx_path: str, run_id: str) -> str:
-    """Daily IVF index maintenance: coarse-quantize ONLY the delta
-    vectors against the FIXED centroid set the index was trained with and
-    append the assignments as one committed generation — the same
-    gen=<run_id> single-rename contract as the signature/pair/census
-    tables (the index never rebuilds over the old corpus, and a replayed
-    run_id replaces its own generation rather than duplicating rows).
-    Generations are disjoint by construction (each run assigns a distinct
-    delta), so `compact_generations(..., IVF_INDEX_SCHEMA)` applies
-    unchanged when the per-day dirs accumulate."""
-    from janet_spark.commit import write_generation
-
-    return write_generation(ivf_assign_frame(emb_delta, cent), idx_path, run_id)
-
-
 def q_ann_ivf_topk_indexed_delta(spark, sf_dir):
     """IVF ANN over a maintained index that grew by a DAILY DELTA: the
     bootstrap day assigns the old corpus (vec_id % {mod} != 0) and trains
@@ -1629,23 +1617,18 @@ def q_ann_ivf_topk_indexed_delta(spark, sf_dir):
     `ann_ivf_topk_indexed` does. The DuckDB oracle recomputes the
     centroid sample over the old subset only, so the held-fixed-centroid
     semantics (NOT full-corpus retraining) is what gets value-checked."""
-    import os
-
-    from janet_spark.commit import live_generation_dirs
-    from janet_spark.dedup_incremental import state_dir_for_input
-
     emb = t(spark, sf_dir, "embeddings")
     is_new = F.col("vec_id") % _IVF_DELTA_MOD == 0
     old = emb.filter(~is_new)
     cent = ivf_centroids(old)  # trained at bootstrap, held fixed
-    idx_path = state_dir_for_input(sf_dir, "embeddings.parquet", "ivf_index_delta")
-    live = {os.path.basename(d) for d in live_generation_dirs(idx_path)}
-    if "gen=bootstrap" not in live:
-        incremental_ivf_index_run(old, cent, idx_path, "bootstrap")
-    if "gen=delta-day2" not in live:
-        incremental_ivf_index_run(emb.filter(is_new), cent, idx_path, "delta-day2")
-    assigned = spark.read.schema(IVF_INDEX_SCHEMA).parquet(
-        *live_generation_dirs(idx_path)
+    assigned = maintained(
+        spark,
+        IVF_INDEX,
+        state_dir_for_input(sf_dir, "embeddings.parquet", "ivf_index_delta"),
+        {
+            "bootstrap": lambda: ivf_assign_frame(old, cent),
+            "delta-day2": lambda: ivf_assign_frame(emb.filter(is_new), cent),
+        },
     )
     return _ivf_search(emb, assigned, cent)
 

@@ -15,6 +15,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from janet_spark.maintained import (
+    Spec,
+    distinct,
+    maintained,
+    min_on,
+    state_dir_for_input,
+    two_day_split,
+)
+
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -600,9 +609,6 @@ FROM conv
 
 # --- maintained retention state (min-merge + distinct-union generations) ----
 
-RETENTION_FIRST_SCHEMA = "user_id long, cohort_week timestamp"
-RETENTION_ACTIVITY_SCHEMA = "user_id long, wk timestamp"
-
 
 def _retention_week_frames(events):
     """(first, activity) delta frames: per-user min first-event week and
@@ -614,84 +620,20 @@ def _retention_week_frames(events):
     return first, activity
 
 
-def incremental_retention_run(
-    delta_events, first_path: str, activity_path: str, run_id: str
-) -> None:
-    """Daily retention maintenance: append one generation to each state
-    table from ONLY the delta. Both merges are idempotent — first-event
-    is MIN-merged (min(min per delta) = global min over ANY cover of the
-    events, including replayed/overlapping deltas) and activity is
-    union-DISTINCT — so this run is replay-tolerant like the HLL
-    registers, unlike the sum-merge censuses."""
-    from janet_spark.commit import write_generation
-
-    first, activity = _retention_week_frames(delta_events)
-    write_generation(first, first_path, run_id)
-    write_generation(activity, activity_path, run_id)
-
-
-def read_retention_state(spark, first_path: str, activity_path: str):
-    """(first, activity) live tables merged from committed generations,
-    or (None, None) when either table has no generation yet."""
-    from janet_spark.commit import live_generation_dirs
-
-    fg = live_generation_dirs(first_path)
-    ag = live_generation_dirs(activity_path)
-    if not fg or not ag:
-        return None, None
-    first = (
-        spark.read.schema(RETENTION_FIRST_SCHEMA)
-        .parquet(*fg)
-        .groupBy("user_id")
-        .agg(F.min("cohort_week").alias("cohort_week"))
-    )
-    activity = (
-        spark.read.schema(RETENTION_ACTIVITY_SCHEMA).parquet(*ag).distinct()
-    )
-    return first, activity
-
-
-def _maintained_retention(spark, sf_dir):
-    """Standing retention state for `sf_dir`'s events, bootstrapping with
-    the standard two-day split. Min-merge/distinct-union are idempotent,
-    so (unlike the sum-merge tables) a re-committed half is harmless —
-    the pure-bootstrap gate is kept anyway for one rule across all
-    maintained constructors."""
-    import os
-
-    from janet_spark.commit import live_generation_dirs
-    from janet_spark.dedup_incremental import state_dir_for_input
-
-    first_path = state_dir_for_input(sf_dir, "events.parquet", "retention_first")
-    activity_path = state_dir_for_input(
-        sf_dir, "events.parquet", "retention_activity"
-    )
-    live_f = {os.path.basename(d) for d in live_generation_dirs(first_path)}
-    live_a = {os.path.basename(d) for d in live_generation_dirs(activity_path)}
-    # the pure-bootstrap gate looks at the UNION of both tables' names —
-    # after a compaction the per-table compacted-<id> names never match,
-    # so an intersection would read two compacted tables as empty state
-    # and re-bootstrap; presence of a half requires it in BOTH tables
-    # (a crash between the two table writes of one run re-commits it,
-    # which write_generation replaces idempotently)
-    if (live_f | live_a) <= {"gen=bootstrap", "gen=delta-day2"}:
-        both = live_f & live_a
-        events = t(spark, sf_dir, "events")
-        if "gen=bootstrap" not in both:
-            incremental_retention_run(
-                events.filter(F.col("event_id") % 2 == 0),
-                first_path,
-                activity_path,
-                "bootstrap",
-            )
-        if "gen=delta-day2" not in both:
-            incremental_retention_run(
-                events.filter(F.col("event_id") % 2 == 1),
-                first_path,
-                activity_path,
-                "delta-day2",
-            )
-    return read_retention_state(spark, first_path, activity_path)
+# Both merges are idempotent: min of per-day mins is the global min over
+# ANY cover of the events, and activity is a distinct union, so replayed
+# or overlapping days merge away, like the HLL registers and unlike the
+# sum-merged censuses.
+RETENTION_FIRST = Spec(
+    "user_id long, cohort_week timestamp",
+    of=lambda events: _retention_week_frames(events)[0],
+    merge=min_on("user_id"),
+)
+RETENTION_ACTIVITY = Spec(
+    "user_id long, wk timestamp",
+    of=lambda events: _retention_week_frames(events)[1],
+    merge=distinct,
+)
 
 
 def _retention_matrix(first, activity):
@@ -734,7 +676,15 @@ def q_retention_cohorts_incremental(spark, sf_dir):
     merges are idempotent, so the merged state over ANY event cover —
     including replayed deltas — equals the full-scan statistics exactly,
     and the standalone oracle serves this query unchanged."""
-    first, activity = _maintained_retention(spark, sf_dir)
+    first, activity = maintained(
+        spark,
+        (RETENTION_FIRST, RETENTION_ACTIVITY),
+        (
+            state_dir_for_input(sf_dir, "events.parquet", "retention_first"),
+            state_dir_for_input(sf_dir, "events.parquet", "retention_activity"),
+        ),
+        two_day_split(lambda: t(spark, sf_dir, "events"), "event_id"),
+    )
     return _retention_matrix(first, activity)
 
 

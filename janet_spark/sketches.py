@@ -63,6 +63,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from janet_spark.maintained import (
+    Spec,
+    maintained,
+    max_on,
+    state_dir_for_input,
+    sum_on,
+    two_day_split,
+)
 from janet_spark.queries_relational import t
 
 _BLOOM_HEX = 5  # hex chars per position: m = 16^5 = 1,048,576 bits —
@@ -245,9 +253,6 @@ _HLL_M = 256  # 2^8 buckets: first 2 md5 hex chars; rsd = 1.04/sqrt(m) = 6.5%
 _HLL_ALPHA = 0.7213 / (1.0 + 1.079 / _HLL_M)
 
 
-HLL_REG_SCHEMA = "grp string, bucket int, mx int"
-
-
 def hll_registers_frame(
     docs: DataFrame, key: str = "text", group: str = "source"
 ) -> DataFrame:
@@ -366,73 +371,16 @@ def distinct_count_hll_frame(
     )
 
 
-def incremental_hll_run(
-    delta_docs: DataFrame,
-    reg_path: str,
-    run_id: str,
-    key: str = "text",
-    group: str = "source",
-) -> str:
-    """Daily HLL maintenance: sketch ONLY the delta's keys and append one
-    committed register generation (the additive-generation contract of
-    the censuses, but with max-merge instead of sum-merge on read). The
-    per-day write is <= m * groups rows however large the delta."""
-    from janet_spark.commit import write_generation
-
-    return write_generation(
-        hll_registers_frame(delta_docs, key, group), reg_path, run_id
-    )
-
-
-def read_hll_registers(spark: SparkSession, reg_path: str) -> DataFrame | None:
-    """Max-merge committed register generations into the live table.
-    Exactness: registers are bucket-wise max of per-key ranks, max is
-    associative/idempotent, so any split of the corpus into deltas --
-    including replayed or overlapping deltas -- merges to exactly the
-    full-corpus register table (strictly stronger than the sum-merge
-    censuses, which need disjoint deltas)."""
-    from janet_spark.commit import live_generation_dirs
-
-    gens = live_generation_dirs(reg_path)
-    if not gens:
-        return None
-    return (
-        spark.read.schema(HLL_REG_SCHEMA)
-        .parquet(*gens)
-        .groupBy("grp", "bucket")
-        .agg(F.max("mx").alias("mx"))
-    )
-
-
-def _maintained_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standing per-source register table for `sf_dir`'s documents,
-    bootstrapping on first touch with the standard two-day split (even
-    doc_ids = gen=bootstrap, odd = gen=delta-day2). Each generation is
-    checked individually so a crash between the two bootstrap commits
-    self-heals instead of reading a half-corpus sketch as complete."""
-    import os
-
-    from janet_spark.commit import live_generation_dirs
-    from janet_spark.dedup_incremental import state_dir_for_input
-
-    reg_path = state_dir_for_input(sf_dir, "documents.parquet", "hll_registers")
-    live = {os.path.basename(d) for d in live_generation_dirs(reg_path)}
-    # backfill ONLY while the state is still pure-bootstrap-shaped: once a
-    # generation with any other name exists (a compaction or a production
-    # run), the bootstrap halves may have been absorbed under a new name
-    # and re-writing them would re-introduce their rows (harmless for
-    # max-merge, a double-count for the sum-merge siblings — one rule)
-    if live <= {"gen=bootstrap", "gen=delta-day2"}:
-        docs = t(spark, sf_dir, "documents")
-        if "gen=bootstrap" not in live:
-            incremental_hll_run(
-                docs.filter(F.col("doc_id") % 2 == 0), reg_path, "bootstrap"
-            )
-        if "gen=delta-day2" not in live:
-            incremental_hll_run(
-                docs.filter(F.col("doc_id") % 2 == 1), reg_path, "delta-day2"
-            )
-    return read_hll_registers(spark, reg_path)
+# registers are bucket-wise max of per-key ranks, and max is associative
+# and idempotent: any split of the corpus into days, replayed or
+# overlapping days included, merges to exactly the full-corpus registers
+# (strictly stronger than the sum-merged censuses, which need disjoint
+# days). A day writes <= m * groups rows however large its delta.
+HLL_REGISTERS = Spec(
+    "grp string, bucket int, mx int",
+    of=hll_registers_frame,
+    merge=max_on("grp", "bucket"),
+)
 
 
 def q_distinct_count_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,11 +391,15 @@ def q_distinct_count_hll_incremental(spark: SparkSession, sf_dir: str) -> DataFr
     exactly, the standalone oracle serves this query unchanged (the one
     full-corpus scan left is the demo-only exact count(DISTINCT)
     column)."""
+    registers = maintained(
+        spark,
+        HLL_REGISTERS,
+        state_dir_for_input(sf_dir, "documents.parquet", "hll_registers"),
+        two_day_split(lambda: t(spark, sf_dir, "documents"), "doc_id"),
+    )
     docs = t(spark, sf_dir, "documents")
     return _hll_report(
-        hll_estimate_frame(_maintained_hll_registers(spark, sf_dir)),
-        _hll_exact(docs, "text", "source"),
-        "source",
+        hll_estimate_frame(registers), _hll_exact(docs, "text", "source"), "source"
     )
 
 
@@ -498,9 +450,6 @@ _QH_K = 8.0  # bucket width 1/8: floor(v*8) is ONE correctly-rounded IEEE
 # multiply + floor, so Spark and DuckDB bucket identically; estimates
 # (bucket+0.5)/8 are exact binary fractions — zero float-parity risk
 _QH_QS = [(0.5, "p50"), (0.9, "p90"), (0.99, "p99")]
-
-HIST_SCHEMA = "grp string, bucket int, n long"
-
 
 def hist_counts_frame(
     events: DataFrame, value: str = "value", group: str = "event_type"
@@ -557,67 +506,14 @@ def hist_quantiles_frame(hist: DataFrame) -> DataFrame:
     return cum.groupBy("grp").agg(*aggs)
 
 
-def incremental_hist_run(
-    delta_events: DataFrame,
-    hist_path: str,
-    run_id: str,
-    value: str = "value",
-    group: str = "event_type",
-) -> str:
-    """Daily histogram maintenance: bucket-count ONLY the delta and append
-    one committed generation. Per-day write is <= range*8 * groups rows
-    however large the delta. Contract: deltas must be DISJOINT (each event
-    counted in exactly one generation) — counts sum-merge on read, like
-    the censuses and unlike the replay-tolerant max-merge HLL registers."""
-    from janet_spark.commit import write_generation
-
-    return write_generation(
-        hist_counts_frame(delta_events, value, group), hist_path, run_id
-    )
-
-
-def read_hist_counts(spark: SparkSession, hist_path: str) -> DataFrame | None:
-    """Sum-merge committed histogram generations into the live table."""
-    from janet_spark.commit import live_generation_dirs
-
-    gens = live_generation_dirs(hist_path)
-    if not gens:
-        return None
-    return (
-        spark.read.schema(HIST_SCHEMA)
-        .parquet(*gens)
-        .groupBy("grp", "bucket")
-        .agg(F.sum("n").alias("n"))
-    )
-
-
-def _maintained_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standing per-type histogram for `sf_dir`'s events, bootstrapping on
-    first touch with the standard two-day split (even event_ids =
-    gen=bootstrap, odd = gen=delta-day2 — disjoint, per the contract).
-    Generations checked individually (crash between the two bootstrap
-    commits self-heals; see _maintained_hll_registers)."""
-    import os
-
-    from janet_spark.commit import live_generation_dirs
-    from janet_spark.dedup_incremental import state_dir_for_input
-
-    hist_path = state_dir_for_input(sf_dir, "events.parquet", "quantile_hist")
-    live = {os.path.basename(d) for d in live_generation_dirs(hist_path)}
-    # backfill only while pure-bootstrap-shaped: after a compaction the
-    # halves live under gen=compacted-* and re-writing them would DOUBLE
-    # the sum-merged counts (see _maintained_hll_registers)
-    if live <= {"gen=bootstrap", "gen=delta-day2"}:
-        events = t(spark, sf_dir, "events")
-        if "gen=bootstrap" not in live:
-            incremental_hist_run(
-                events.filter(F.col("event_id") % 2 == 0), hist_path, "bootstrap"
-            )
-        if "gen=delta-day2" not in live:
-            incremental_hist_run(
-                events.filter(F.col("event_id") % 2 == 1), hist_path, "delta-day2"
-            )
-    return read_hist_counts(spark, hist_path)
+# counts sum-merge, so days must be DISJOINT (each event counted in
+# exactly one generation), like the censuses and unlike the replay-tolerant
+# max-merged HLL registers; a day writes <= range*8 * groups rows
+HISTOGRAM = Spec(
+    "grp string, bucket int, n long",
+    of=hist_counts_frame,
+    merge=sum_on("grp", "bucket"),
+)
 
 
 def _exact_percentiles(events: DataFrame) -> DataFrame:
@@ -662,11 +558,14 @@ def q_quantile_hist_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint event_id split equals the full-corpus histogram exactly, so
     the standalone oracle serves this query unchanged (the full-corpus
     scan left is the demo-only exact-percentile value check)."""
-    events = t(spark, sf_dir, "events")
-    return _hist_report(
-        hist_quantiles_frame(_maintained_hist(spark, sf_dir)),
-        _exact_percentiles(events),
+    hist = maintained(
+        spark,
+        HISTOGRAM,
+        state_dir_for_input(sf_dir, "events.parquet", "quantile_hist"),
+        two_day_split(lambda: t(spark, sf_dir, "events"), "event_id"),
     )
+    events = t(spark, sf_dir, "events")
+    return _hist_report(hist_quantiles_frame(hist), _exact_percentiles(events))
 
 
 ORACLE_QUANTILE_HIST = """

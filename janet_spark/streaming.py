@@ -478,9 +478,9 @@ def hll_register_stream(
 ) -> StreamingQuery:
     """Streaming cardinality maintenance: each micro-batch of documents
     commits ONE HyperLogLog register generation (<= 256 rows per group,
-    however large the batch); `sketches.read_hll_registers` max-merges
-    the generations into the live per-source distinct-count dashboard at
-    read time.
+    however large the batch); `maintained.read(spark,
+    sketches.HLL_REGISTERS, reg_path)` max-merges the generations into the
+    live per-source distinct-count dashboard at read time.
 
     Why foreachBatch + the generation store rather than a streaming agg:
     an unwindowed groupBy over an append stream needs complete/update
@@ -488,12 +488,19 @@ def hll_register_stream(
     mergeable sketch state, shared bit-for-bit with the batch operator
     (`distinct_count_hll`), so batch and stream cannot drift. Exactness
     under replay: foreachBatch is at-least-once — a replayed batch
-    re-commits gen=batch-<id>, which `commit.write_generation` REPLACES
+    re-commits gen=batch-<id>, which `maintained.append` REPLACES
     (idempotent per gen_id), and even a duplicate commit under a new id
     would merge away because registers max-merge (max is idempotent) —
     the property the sum-merge censuses lack and the reason HLL is the
     sketch you maintain from a stream."""
-    from janet_spark.sketches import incremental_hll_run
+    from dataclasses import replace
+
+    from janet_spark.maintained import append
+    from janet_spark.sketches import HLL_REGISTERS, hll_registers_frame
+
+    registers = replace(
+        HLL_REGISTERS, of=lambda df: hll_registers_frame(df, key, group)
+    )
 
     stream = (
         spark.readStream.schema(DOCS_DDL)
@@ -502,9 +509,7 @@ def hll_register_stream(
     )
 
     def commit_registers(batch_df, batch_id: int) -> None:
-        incremental_hll_run(
-            batch_df, reg_path, f"batch-{batch_id:012d}", key=key, group=group
-        )
+        append(registers, batch_df, reg_path, f"batch-{batch_id:012d}")
 
     return (
         stream.writeStream.foreachBatch(commit_registers)

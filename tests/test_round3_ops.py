@@ -655,6 +655,7 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
 
     import janet_spark.dedup_incremental as di
     from janet_spark.commit import generation_dirs
+    from janet_spark.maintained import read
 
     t_a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     t_b = "one two three four five six seven eight nine ten"
@@ -696,7 +697,7 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
 
     # a crashed run's staging dir is invisible to readers
     os.makedirs(os.path.join(sig, "_staging_deadrun"))
-    n_docs = di.read_signature_table(spark, sig).select("doc_id").distinct().count()
+    n_docs = read(spark, di.SIGNATURES, sig).select("doc_id").distinct().count()
     assert n_docs == 5  # 3 corpus + 2 deltas, 16 bands each
 
     # day 3 (hot path, OLD rep): cap=2 makes the t_a bucket (docs 1, 100,
@@ -724,11 +725,11 @@ def test_incremental_dedup_daily_runs(spark, tmp_path, monkeypatch):
     assert len(generation_dirs(census_dir)) == 5  # bootstrap + 4 runs
     got_census = {
         r["band_key"]: (r["bkt_n"], r["rep_doc"])
-        for r in di.read_census(spark, census_dir).collect()
+        for r in read(spark, di.CENSUS, census_dir).collect()
     }
     want_census = {
         r["band_key"]: (r["bkt_n"], r["rep_doc"])
-        for r in di._census_of(di.read_signature_table(spark, sig)).collect()
+        for r in di._census_of(read(spark, di.SIGNATURES, sig)).collect()
     }
     assert got_census == want_census
 

@@ -254,25 +254,20 @@ def test_ann_ivf_indexed_matches_per_call_form(spark, tmp_path, monkeypatch):
     call from the stored table."""
     import os
 
-    import janet_spark.dedup_incremental as dinc
+    from janet_spark.maintained import state_dir_for_input
     from janet_spark.queries_extra import q_ann_ivf_topk, q_ann_ivf_topk_indexed
 
-    state_root = str(tmp_path / "state")
-
-    def patched(sf_dir, file_name, state_name):
-        return os.path.join(state_root, f"{state_name}")
-
-    monkeypatch.setattr(dinc, "state_dir_for_input", patched)
+    monkeypatch.setenv("JANET_SPARK_STATE_DIR", str(tmp_path / "state"))
+    index = state_dir_for_input(SF, "embeddings.parquet", "ivf_index")
 
     base = [tuple(r) for r in q_ann_ivf_topk(spark, SF).collect()]
     got1 = [tuple(r) for r in q_ann_ivf_topk_indexed(spark, SF).collect()]
     assert got1 == base and base
-    gens = os.listdir(os.path.join(state_root, "ivf_index"))
-    assert gens == ["gen=bootstrap"]
+    assert os.listdir(index) == ["gen=bootstrap"]
     # second call: reads the stored index (no new generation)
     got2 = [tuple(r) for r in q_ann_ivf_topk_indexed(spark, SF).collect()]
     assert got2 == base
-    assert os.listdir(os.path.join(state_root, "ivf_index")) == ["gen=bootstrap"]
+    assert os.listdir(index) == ["gen=bootstrap"]
 
 
 def test_staged_cte_render_matches_python_tokenizer_property():
@@ -315,20 +310,30 @@ def test_staged_cte_render_matches_python_tokenizer_property():
 
 
 def test_maintained_pairs_fingerprint_invalidates_on_input_change(spark, tmp_path):
-    """_maintained_pairs keys its state dir by a fingerprint of the input
-    parquet (path + size + mtime): a REGENERATED input must get a fresh
-    state dir, never stale pairs from the old corpus."""
+    """The maintained pair table keys its state dir by a fingerprint of the
+    input parquet (path + size + mtime): a REGENERATED input must get a
+    fresh state dir, never stale pairs from the old corpus."""
     import os
     import shutil
     import time
 
-    from janet_spark.queries_text import _maintained_pairs
+    from janet_spark.dedup_incremental import PAIRS
+    from janet_spark.maintained import maintained, state_dir_for_input
+    from janet_spark.queries_text import q_minhash_lsh_pairs
+
+    def pairs_of(sf):
+        return maintained(
+            spark,
+            PAIRS,
+            state_dir_for_input(sf, "documents.parquet", "pairs"),
+            {"bootstrap": lambda: q_minhash_lsh_pairs(spark, sf)},
+        )
 
     sf = str(tmp_path / "sf")
     os.makedirs(sf)
     shutil.copy("/root/testdata/sf0.001/documents.parquet", sf)
 
-    p1 = _maintained_pairs(spark, sf)
+    p1 = pairs_of(sf)
     n1 = p1.count()
 
     # regenerate the input: drop half the docs (different size + mtime)
@@ -343,7 +348,7 @@ def test_maintained_pairs_fingerprint_invalidates_on_input_change(spark, tmp_pat
         pa.Table.from_pandas(half, preserve_index=False),
         os.path.join(sf, "documents.parquet"),
     )
-    p2 = _maintained_pairs(spark, sf)
+    p2 = pairs_of(sf)
     n2 = p2.count()
     # the halved corpus must re-mine: every remaining pair has both
     # endpoints even, and the count differs from the stale table's
@@ -363,12 +368,10 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from janet_spark.commit import write_generation
-    from janet_spark.dedup_incremental import (
-        SIG_SCHEMA,
-        compact_generations,
-        prune_snapshots,
-        read_signature_table,
-    )
+    from janet_spark.dedup_incremental import SIGNATURES
+    from janet_spark.maintained import compact_generations, prune_snapshots, read
+
+    SIG_SCHEMA = SIGNATURES.schema
 
     sig = str(tmp_path / "sigs")
     # 10 daily generations, disjoint doc_id ranges (the additive shape)
@@ -380,11 +383,11 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
     def snapshot():
         return sorted(
             (r.doc_id, r.band_key)
-            for r in read_signature_table(spark, sig).collect()
+            for r in read(spark, SIGNATURES, sig).collect()
         )
 
     before = snapshot()
-    summary = compact_generations(spark, sig, SIG_SCHEMA, keep_latest=3)
+    summary = compact_generations(spark, SIGNATURES, sig, keep_latest=3)
     assert summary["compacted"] and summary["n_absorbed"] == 7
     assert snapshot() == before  # reads identical
     gens = [d for d in os.listdir(sig) if d.startswith("gen=")]
@@ -401,7 +404,7 @@ def test_compact_generations_preserves_reads_and_resume(spark, tmp_path):
     write_generation(df, sig, zombie.removeprefix("gen="))
     assert snapshot() == before  # zombie skipped, not double-counted
     # the next compaction sweeps the zombie
-    compact_generations(spark, sig, SIG_SCHEMA, keep_latest=3)
+    compact_generations(spark, SIGNATURES, sig, keep_latest=3)
     assert not os.path.isdir(os.path.join(sig, zombie))
     assert snapshot() == before
 
@@ -434,13 +437,8 @@ def test_incremental_dedup_after_compaction_matches_uncompacted(spark, tmp_path)
     the standing pair table must equal the uncompacted timeline's."""
     from pyspark.sql import functions as F
 
-    from janet_spark.dedup_incremental import (
-        PAIRS_SCHEMA,
-        SIG_SCHEMA,
-        compact_generations,
-        incremental_dedup_run,
-        read_pairs_table,
-    )
+    from janet_spark.dedup_incremental import PAIRS, SIGNATURES, incremental_dedup_run
+    from janet_spark.maintained import compact_generations, read
     from janet_spark.queries_relational import t
 
     sf = "/root/testdata/sf0.001"
@@ -455,14 +453,14 @@ def test_incremental_dedup_after_compaction_matches_uncompacted(spark, tmp_path)
             incremental_dedup_run(spark, sig, days[k], corpus, pairs_path=pairs)
             corpus = corpus.unionByName(days[k])
         if compact_after_day3:
-            compact_generations(spark, sig, SIG_SCHEMA, keep_latest=1)
-            compact_generations(spark, pairs, PAIRS_SCHEMA, keep_latest=1)
+            compact_generations(spark, SIGNATURES, sig, keep_latest=1)
+            compact_generations(spark, PAIRS, pairs, keep_latest=1)
         day4, _ = incremental_dedup_run(
             spark, sig, days[3], corpus, pairs_path=pairs
         )
         table = {
             (r.d1, r.d2, r.jaccard)
-            for r in read_pairs_table(spark, pairs).collect()
+            for r in read(spark, PAIRS, pairs).collect()
         }
         return {(r.d1, r.d2, r.jaccard) for r in day4.collect()}, table
 
@@ -485,11 +483,12 @@ def test_incremental_conv_dedup_run_maintained_state(spark, tmp_path):
 
     from janet_spark.conversations import conv_neardup_frame
     from janet_spark.dedup_incremental import (
+        CONV_PAIRS,
+        CONV_SIGNATURES,
         incremental_conv_dedup_run,
-        read_conv_pairs_table,
-        read_conv_signature_table,
     )
     from janet_spark.derive import derived_transcripts
+    from janet_spark.maintained import read
 
     tr = derived_transcripts(spark, "/root/testdata/sf0.001")
     ordinal = F.substring(F.col("conv_id"), 6, 10).cast("long")
@@ -511,7 +510,7 @@ def test_incremental_conv_dedup_run_maintained_state(spark, tmp_path):
     )
     maintained = {
         (r.c1, r.c2, r.jaccard)
-        for r in read_conv_pairs_table(spark, pairs_path).collect()
+        for r in read(spark, CONV_PAIRS, pairs_path).collect()
     }
     batch = {
         (r.c1, r.c2, r.jaccard) for r in conv_neardup_frame(tr).collect()
@@ -520,7 +519,7 @@ def test_incremental_conv_dedup_run_maintained_state(spark, tmp_path):
 
     # signature table: one row per conversation, one generation per run
     # (plus the empty bootstrap)
-    sigs = read_conv_signature_table(spark, sig)
+    sigs = read(spark, CONV_SIGNATURES, sig)
     n_convs = tr.select("conv_id").distinct().count()
     assert sigs.count() == n_convs
     gens = sorted(d for d in os.listdir(sig) if d.startswith("gen="))
@@ -531,7 +530,7 @@ def test_incremental_conv_dedup_run_maintained_state(spark, tmp_path):
         spark, sig, empty, tr, pairs_path=pairs_path
     )
     assert p3.count() == 0
-    assert read_conv_signature_table(spark, sig).count() == n_convs
+    assert read(spark, CONV_SIGNATURES, sig).count() == n_convs
 
 
 def test_maintained_pairs_report_equals_remined_two_generations(spark, tmp_path):
@@ -543,10 +542,8 @@ def test_maintained_pairs_report_equals_remined_two_generations(spark, tmp_path)
     the maintained table equals the report that re-mines from scratch."""
     from pyspark.sql import functions as F
 
-    from janet_spark.dedup_incremental import (
-        incremental_dedup_run,
-        read_pairs_table,
-    )
+    from janet_spark.dedup_incremental import PAIRS, incremental_dedup_run
+    from janet_spark.maintained import read
     from janet_spark.queries_relational import t
     from janet_spark.queries_text import (
         dedup_report_frame,
@@ -565,7 +562,7 @@ def test_maintained_pairs_report_equals_remined_two_generations(spark, tmp_path)
     incremental_dedup_run(spark, sig, day1, empty, pairs_path=pairs_path)
     incremental_dedup_run(spark, sig, day2, day1, pairs_path=pairs_path)
 
-    maintained = read_pairs_table(spark, pairs_path)
+    maintained = read(spark, PAIRS, pairs_path)
     mined = q_minhash_lsh_pairs(spark, sf)
     m = {(r.d1, r.d2, r.jaccard) for r in maintained.collect()}
     b = {(r.d1, r.d2, r.jaccard) for r in mined.collect()}

@@ -19,11 +19,12 @@ def test_conv_sig_read_dedups_replayed_generation(spark, tmp_path):
     replayed full run must not change the mined pair set."""
     from janet_spark.conversations import conv_neardup_frame
     from janet_spark.dedup_incremental import (
+        CONV_PAIRS,
+        CONV_SIGNATURES,
         incremental_conv_dedup_run,
-        read_conv_pairs_table,
-        read_conv_signature_table,
     )
     from janet_spark.derive import derived_transcripts
+    from janet_spark.maintained import read
 
     tr = derived_transcripts(spark, "/root/testdata/sf0.001")
     ordinal = F.substring(F.col("conv_id"), 6, 10).cast("long")
@@ -43,12 +44,12 @@ def test_conv_sig_read_dedups_replayed_generation(spark, tmp_path):
     incremental_conv_dedup_run(spark, sig, day1, empty, pairs_path=pairs_path)
     incremental_conv_dedup_run(spark, sig, day2, day1, pairs_path=pairs_path)
 
-    sigs = read_conv_signature_table(spark, sig)
+    sigs = read(spark, CONV_SIGNATURES, sig)
     n_convs = tr.select("conv_id").distinct().count()
     assert sigs.count() == n_convs  # deduped on read despite the replay
     maintained = {
         (r.c1, r.c2, r.jaccard)
-        for r in read_conv_pairs_table(spark, pairs_path).collect()
+        for r in read(spark, CONV_PAIRS, pairs_path).collect()
     }
     batch = {(r.c1, r.c2, r.jaccard) for r in conv_neardup_frame(tr).collect()}
     assert maintained == batch and maintained
@@ -57,14 +58,13 @@ def test_conv_sig_read_dedups_replayed_generation(spark, tmp_path):
 def test_compact_pairs_table_distinct_squeezes_retry_duplicates(spark, tmp_path):
     """Round-4 advice: pair generations are NOT disjoint (a retry
     re-commits identical pairs under a new generation id), so pair-table
-    compaction must distinct the union rather than bake the duplicates
-    into the compacted generation."""
+    compaction must write the merged (distinct) union rather than bake
+    the duplicates into the compacted generation."""
     from janet_spark.commit import write_generation
-    from janet_spark.dedup_incremental import (
-        PAIRS_SCHEMA,
-        compact_generations,
-        read_pairs_table,
-    )
+    from janet_spark.dedup_incremental import PAIRS
+    from janet_spark.maintained import compact_generations, read
+
+    PAIRS_SCHEMA = PAIRS.schema
 
     pairs = str(tmp_path / "pairs")
     day1 = spark.createDataFrame([(1, 2, 0.9), (3, 4, 0.8)], PAIRS_SCHEMA)
@@ -79,11 +79,9 @@ def test_compact_pairs_table_distinct_squeezes_retry_duplicates(spark, tmp_path)
 
     before = sorted(
         (r.d1, r.d2, r.jaccard)
-        for r in read_pairs_table(spark, pairs).collect()
+        for r in read(spark, PAIRS, pairs).collect()
     )
-    summary = compact_generations(
-        spark, pairs, PAIRS_SCHEMA, keep_latest=1, distinct=True
-    )
+    summary = compact_generations(spark, PAIRS, pairs, keep_latest=1)
     assert summary["compacted"] and summary["n_absorbed"] == 3
     # the compacted generation holds the DISTINCT union: 3 pairs, not 5
     assert summary["rows"] == 3
@@ -93,7 +91,7 @@ def test_compact_pairs_table_distinct_squeezes_retry_duplicates(spark, tmp_path)
     assert raw.count() == 3  # duplicates squeezed out on disk, not just on read
     after = sorted(
         (r.d1, r.d2, r.jaccard)
-        for r in read_pairs_table(spark, pairs).collect()
+        for r in read(spark, PAIRS, pairs).collect()
     )
     assert after == before
 
@@ -384,7 +382,7 @@ def test_audio_decode_stats_matches_direct_synthesis(spark):
 def test_state_dir_env_override(tmp_path, monkeypatch):
     """JANET_SPARK_STATE_DIR points maintained state at a durable root
     instead of the world-shared OS temp dir."""
-    from janet_spark.dedup_incremental import state_dir_for_input
+    from janet_spark.maintained import state_dir_for_input
 
     d = state_dir_for_input("/root/testdata/sf0.001", "documents.parquet", "x")
     assert d.startswith(os.path.join("/tmp", "janet_spark_state")) or (
@@ -493,13 +491,8 @@ def test_ivf_delta_append_equals_rebuilt(spark, tmp_path):
     corpus with the same centroids — row-for-row in the assignment table,
     and through compaction."""
     from janet_spark.commit import live_generation_dirs
-    from janet_spark.dedup_incremental import compact_generations
-    from janet_spark.queries_extra import (
-        IVF_INDEX_SCHEMA,
-        incremental_ivf_index_run,
-        ivf_assign_frame,
-        ivf_centroids,
-    )
+    from janet_spark.maintained import append, compact_generations, read
+    from janet_spark.queries_extra import IVF_INDEX, ivf_assign_frame, ivf_centroids
     from janet_spark.queries_relational import t
 
     emb = t(spark, _SF, "embeddings")
@@ -508,14 +501,13 @@ def test_ivf_delta_append_equals_rebuilt(spark, tmp_path):
     cent = ivf_centroids(old)
 
     idx = str(tmp_path / "ivf")
-    incremental_ivf_index_run(old, cent, idx, "bootstrap")
-    incremental_ivf_index_run(delta, cent, idx, "delta-day2")
+    append(IVF_INDEX, ivf_assign_frame(old, cent), idx, "bootstrap")
+    append(IVF_INDEX, ivf_assign_frame(delta, cent), idx, "delta-day2")
     assert len(live_generation_dirs(idx)) == 2
 
     def table():
         return (
-            spark.read.schema(IVF_INDEX_SCHEMA)
-            .parquet(*live_generation_dirs(idx))
+            read(spark, IVF_INDEX, idx)
             .select("vec_id", "cell")
             .toPandas()
             .sort_values("vec_id")
@@ -532,11 +524,11 @@ def test_ivf_delta_append_equals_rebuilt(spark, tmp_path):
     pd.testing.assert_frame_equal(table(), rebuilt)
 
     # replaying the delta run must replace, not duplicate
-    incremental_ivf_index_run(delta, cent, idx, "delta-day2")
+    append(IVF_INDEX, ivf_assign_frame(delta, cent), idx, "delta-day2")
     pd.testing.assert_frame_equal(table(), rebuilt)
 
     # compaction (generations disjoint by construction) preserves the table
-    compact_generations(spark, idx, IVF_INDEX_SCHEMA, keep_latest=0)
+    compact_generations(spark, IVF_INDEX, idx, keep_latest=0)
     assert len(live_generation_dirs(idx)) == 1
     pd.testing.assert_frame_equal(table(), rebuilt)
 
@@ -551,13 +543,8 @@ def test_exact_census_maintained_equals_scanned_two_generations(spark, tmp_path)
     must equal the census scanned from the full corpus in one pass, both
     as a table and through the report's exact-dup aggregates — and
     compaction must preserve it."""
-    from janet_spark.dedup_incremental import (
-        EXACT_CENSUS_SCHEMA,
-        compact_generations,
-        exact_census_of,
-        incremental_exact_census_run,
-        read_exact_census,
-    )
+    from janet_spark.dedup_incremental import EXACT_CENSUS, exact_census_of
+    from janet_spark.maintained import append, compact_generations, read
     from janet_spark.queries_relational import t
 
     docs = t(spark, _SF, "documents")
@@ -565,12 +552,12 @@ def test_exact_census_maintained_equals_scanned_two_generations(spark, tmp_path)
     day2 = docs.filter(F.col("doc_id") % 3 == 0)
 
     path = str(tmp_path / "census")
-    incremental_exact_census_run(day1, path, "bootstrap")
-    incremental_exact_census_run(day2, path, "day2")
+    append(EXACT_CENSUS, day1, path, "bootstrap")
+    append(EXACT_CENSUS, day2, path, "day2")
 
     def table():
         return (
-            read_exact_census(spark, path)
+            read(spark, EXACT_CENSUS, path)
             .toPandas()
             .sort_values(["kk", "source"])
             .reset_index(drop=True)
@@ -585,11 +572,11 @@ def test_exact_census_maintained_equals_scanned_two_generations(spark, tmp_path)
     pd.testing.assert_frame_equal(table(), scanned)
 
     # replay of a committed day replaces, never double-counts
-    incremental_exact_census_run(day2, path, "day2")
+    append(EXACT_CENSUS, day2, path, "day2")
     pd.testing.assert_frame_equal(table(), scanned)
 
-    # compaction: reads re-aggregate, so plain-union compaction is exact
-    compact_generations(spark, path, EXACT_CENSUS_SCHEMA, keep_latest=0)
+    # compaction writes the summed table a reader sees
+    compact_generations(spark, EXACT_CENSUS, path, keep_latest=0)
     pd.testing.assert_frame_equal(table(), scanned)
 
 
@@ -892,10 +879,8 @@ def test_line_census_maintained_equals_scanned_two_generations(spark, tmp_path):
     occurrences arrive in DIFFERENT deltas (the additivity property)."""
     from pyspark.sql import functions as F
 
-    from janet_spark.dedup_incremental import (
-        incremental_line_census_run,
-        read_line_census,
-    )
+    from janet_spark.dedup_incremental import LINE_CENSUS
+    from janet_spark.maintained import append, read
     from janet_spark.queries_text import _line_docs, line_dedup_corpus_frame
 
     def line(tag):
@@ -912,9 +897,9 @@ def test_line_census_maintained_equals_scanned_two_generations(spark, tmp_path):
         delta_lines = _line_docs(delta).select(
             "doc_id", F.md5("line").alias("line_sig")
         )
-        incremental_line_census_run(delta_lines, path, day)
+        append(LINE_CENSUS, delta_lines, path, day)
 
-    census = read_line_census(spark, path)
+    census = read(spark, LINE_CENSUS, path)
     maintained = sorted(
         map(tuple, line_dedup_corpus_frame(docs, census=census).collect())
     )
@@ -1193,20 +1178,20 @@ def test_hll_maintained_registers_equal_full_rebuild(spark, tmp_path):
     """Max-merged register generations must equal the full-corpus
     register table exactly — even when deltas OVERLAP (a replayed day),
     the case sum-merge censuses cannot tolerate: max is idempotent."""
+    from janet_spark.maintained import append, read
     from janet_spark.sketches import (
+        HLL_REGISTERS,
         hll_estimate_frame,
         hll_registers_frame,
-        incremental_hll_run,
-        read_hll_registers,
     )
 
     rows = [(i, f"key {i}", f"s{i % 3}") for i in range(900)]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
     path = str(tmp_path / "hll_regs")
-    incremental_hll_run(docs.filter("doc_id < 400"), path, "day1")
+    append(HLL_REGISTERS, docs.filter("doc_id < 400"), path, "day1")
     # day2 REPLAYS docs 300-399 (overlap) alongside its fresh rows
-    incremental_hll_run(docs.filter("doc_id >= 300"), path, "day2")
-    maintained = read_hll_registers(spark, path)
+    append(HLL_REGISTERS, docs.filter("doc_id >= 300"), path, "day2")
+    maintained = read(spark, HLL_REGISTERS, path)
     full = hll_registers_frame(docs)
     assert sorted(map(tuple, maintained.collect())) == sorted(
         map(tuple, full.collect())
@@ -1241,21 +1226,17 @@ def test_quantile_hist_half_bucket_accuracy(spark):
 def test_quantile_hist_maintained_equals_full_rebuild(spark, tmp_path):
     """Sum-merged histogram generations over a disjoint event split must
     equal the full-corpus histogram exactly, and the estimates with it."""
-    from janet_spark.sketches import (
-        hist_counts_frame,
-        hist_quantiles_frame,
-        incremental_hist_run,
-        read_hist_counts,
-    )
+    from janet_spark.maintained import append, read
+    from janet_spark.sketches import HISTOGRAM, hist_counts_frame, hist_quantiles_frame
 
     rows = [(i, f"t{i % 2}", float((i * 13) % 211) / 4.0) for i in range(600)]
     events = spark.createDataFrame(
         rows, "event_id long, event_type string, value double"
     )
     path = str(tmp_path / "qhist")
-    incremental_hist_run(events.filter("event_id % 3 = 0"), path, "day1")
-    incremental_hist_run(events.filter("event_id % 3 != 0"), path, "day2")
-    maintained = read_hist_counts(spark, path)
+    append(HISTOGRAM, events.filter("event_id % 3 = 0"), path, "day1")
+    append(HISTOGRAM, events.filter("event_id % 3 != 0"), path, "day2")
+    maintained = read(spark, HISTOGRAM, path)
     full = hist_counts_frame(events)
     assert sorted(map(tuple, maintained.collect())) == sorted(
         map(tuple, full.collect())
@@ -1355,12 +1336,12 @@ def test_maintained_retention_replay_tolerant(spark, tmp_path):
     import os
     from datetime import datetime as DT, timedelta
 
-    from janet_spark.dedup_incremental import state_dir_for_input
+    from janet_spark.maintained import append, read, state_dir_for_input
     from janet_spark.queries_relational import (
+        RETENTION_ACTIVITY,
+        RETENTION_FIRST,
         _retention_matrix,
         _retention_week_frames,
-        incremental_retention_run,
-        read_retention_state,
     )
 
     rows = [
@@ -1380,56 +1361,15 @@ def test_maintained_retention_replay_tolerant(spark, tmp_path):
     fp = state_dir_for_input(sf, "events.parquet", "retention_first")
     ap = state_dir_for_input(sf, "events.parquet", "retention_activity")
     # day2 REPLAYS event_ids 100-199 alongside its fresh rows
-    incremental_retention_run(events.filter("event_id < 200"), fp, ap, "day1")
-    incremental_retention_run(events.filter("event_id >= 100"), fp, ap, "day2")
-    first_m, act_m = read_retention_state(spark, fp, ap)
+    for day, delta in (("day1", "event_id < 200"), ("day2", "event_id >= 100")):
+        append(RETENTION_FIRST, events.filter(delta), fp, day)
+        append(RETENTION_ACTIVITY, events.filter(delta), ap, day)
+    first_m = read(spark, RETENTION_FIRST, fp)
+    act_m = read(spark, RETENTION_ACTIVITY, ap)
     first_f, act_f = _retention_week_frames(events)
     got = sorted(map(tuple, _retention_matrix(first_m, act_m).collect()))
     want = sorted(map(tuple, _retention_matrix(first_f, act_f).collect()))
     assert got == want
-
-
-def test_maintained_retention_no_rebootstrap_after_compaction(spark, tmp_path):
-    """After BOTH retention tables are compacted (per-table compacted-<id>
-    names never match each other), the constructor must not re-bootstrap:
-    the pure-bootstrap gate looks at the UNION of the two tables' names,
-    so two compacted tables read as maintained state, not empty state."""
-    import os
-    from datetime import datetime as DT, timedelta
-
-    from janet_spark.commit import live_generation_dirs
-    from janet_spark.dedup_incremental import (
-        compact_generations,
-        state_dir_for_input,
-    )
-    from janet_spark.queries_relational import (
-        RETENTION_ACTIVITY_SCHEMA,
-        RETENTION_FIRST_SCHEMA,
-        _maintained_retention,
-    )
-
-    rows = [
-        (i, DT(2024, 1, 1) + timedelta(days=i % 21), i % 30, "view", 1.0, "{}")
-        for i in range(200)
-    ]
-    ev = spark.createDataFrame(
-        rows,
-        "event_id long, ts timestamp, user_id long, event_type string,"
-        " value double, props string",
-    )
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf, exist_ok=True)
-    ev.write.mode("overwrite").parquet(f"{sf}/events.parquet")
-
-    _maintained_retention(spark, sf)  # bootstrap
-    fp = state_dir_for_input(sf, "events.parquet", "retention_first")
-    ap = state_dir_for_input(sf, "events.parquet", "retention_activity")
-    compact_generations(spark, fp, RETENTION_FIRST_SCHEMA, keep_latest=0)
-    compact_generations(spark, ap, RETENTION_ACTIVITY_SCHEMA, keep_latest=0)
-    before = (set(live_generation_dirs(fp)), set(live_generation_dirs(ap)))
-    _maintained_retention(spark, sf)
-    after = (set(live_generation_dirs(fp)), set(live_generation_dirs(ap)))
-    assert after == before  # no re-bootstrap generations appeared
 
 
 def test_event_transitions_and_funnel_latency(spark, tmp_path):
@@ -1526,91 +1466,12 @@ def test_retention_cohorts_two_cohorts_with_dropout(spark, tmp_path):
     assert b2.retention_pct == 1.0
 
 
-def test_maintained_bootstrap_self_heals_partial_commit(spark, tmp_path):
-    """A crash between the two bootstrap generation commits must not be
-    read as a complete bootstrap: the constructor checks each generation
-    individually and backfills the missing one (the
-    ann_ivf_topk_indexed_delta pattern, applied to the HLL/hist/DSIR
-    two-generation bootstrappers)."""
-    import os
-
-    from janet_spark.dedup_incremental import state_dir_for_input
-    from janet_spark.sketches import (
-        _maintained_hll_registers,
-        hll_registers_frame,
-        incremental_hll_run,
-    )
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf, exist_ok=True)
-    rows = [(i, f"heal key {i}", "en", f"s{i % 2}", 10) for i in range(300)]
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    docs.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-
-    # simulate the crash: ONLY gen=bootstrap (even doc_ids) committed
-    reg_path = state_dir_for_input(sf, "documents.parquet", "hll_registers")
-    incremental_hll_run(
-        spark.read.parquet(f"{sf}/documents.parquet").filter("doc_id % 2 = 0"),
-        reg_path,
-        "bootstrap",
-    )
-    healed = _maintained_hll_registers(spark, sf)
-    full = hll_registers_frame(spark.read.parquet(f"{sf}/documents.parquet"))
-    assert sorted(map(tuple, healed.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-
-
-def test_maintained_hist_survives_compaction_without_rebootstrap(spark, tmp_path):
-    """After compact_generations absorbs the bootstrap halves under
-    gen=compacted-*, the maintained constructor must NOT re-write them:
-    for a sum-merged table that would double every count. The backfill
-    is gated on the state still being pure-bootstrap-shaped."""
-    import os
-
-    from janet_spark.dedup_incremental import (
-        compact_generations,
-        state_dir_for_input,
-    )
-    from janet_spark.sketches import (
-        HIST_SCHEMA,
-        _maintained_hist,
-        hist_counts_frame,
-    )
-
-    sf = str(tmp_path / "sf")
-    os.makedirs(sf, exist_ok=True)
-    rows = [(i, f"t{i % 2}", float((i * 7) % 101) / 2.0) for i in range(400)]
-    events = spark.createDataFrame(
-        rows, "event_id long, event_type string, value double"
-    )
-    events.write.mode("overwrite").parquet(f"{sf}/events.parquet")
-
-    before = sorted(map(tuple, _maintained_hist(spark, sf).collect()))
-    hist_path = state_dir_for_input(sf, "events.parquet", "quantile_hist")
-    compact_generations(spark, hist_path, HIST_SCHEMA, keep_latest=0)
-    after = sorted(map(tuple, _maintained_hist(spark, sf).collect()))
-    full = sorted(
-        map(
-            tuple,
-            hist_counts_frame(spark.read.parquet(f"{sf}/events.parquet")).collect(),
-        )
-    )
-    assert before == full
-    assert after == full  # NOT doubled
-
-
 def test_dsir_maintained_counts_equal_full_scan(spark, tmp_path):
     """The summed count generations must equal the full-corpus classifier
     (occurrences partition by doc_id across deltas), and the maintained
     scorer must reproduce the standalone scores for the delta exactly."""
-    from janet_spark.dedup_incremental import (
-        dsir_counts_of,
-        incremental_dsir_counts_run,
-        read_dsir_counts,
-    )
+    from janet_spark.dedup_incremental import DSIR_COUNTS, dsir_counts_of
+    from janet_spark.maintained import append, read
     from janet_spark.queries_relational import t
     from janet_spark.queries_text import (
         _dsir_feature_occurrences,
@@ -1621,18 +1482,20 @@ def test_dsir_maintained_counts_equal_full_scan(spark, tmp_path):
 
     docs = t(spark, _SF, "documents")
     path = str(tmp_path / "dsir_counts")
-    occ_h = _dsir_feature_occurrences(docs.filter(F.col("doc_id") % 2 == 0))
-    occ_d = _dsir_feature_occurrences(docs.filter(F.col("doc_id") % 2 == 1))
-    incremental_dsir_counts_run(occ_h, path, "bootstrap")
-    incremental_dsir_counts_run(occ_d, path, "delta-day2")
-    summed = read_dsir_counts(spark, path).orderBy("bucket").collect()
+    delta = docs.filter(F.col("doc_id") % 2 == 1)
+    append(DSIR_COUNTS, docs.filter(F.col("doc_id") % 2 == 0), path, "bootstrap")
+    append(DSIR_COUNTS, delta, path, "delta-day2")
+    summed = read(spark, DSIR_COUNTS, path).orderBy("bucket").collect()
     full = (
         dsir_counts_of(_dsir_feature_occurrences(docs)).orderBy("bucket").collect()
     )
     assert [tuple(r) for r in summed] == [tuple(r) for r in full]
 
     maintained = (
-        _dsir_score(occ_d, _dsir_ratio_from_counts(read_dsir_counts(spark, path)))
+        _dsir_score(
+            _dsir_feature_occurrences(delta),
+            _dsir_ratio_from_counts(read(spark, DSIR_COUNTS, path)),
+        )
         .orderBy("doc_id")
         .collect()
     )

@@ -482,11 +482,11 @@ def test_hll_register_stream_matches_batch_sketch(spark, tmp_path):
     max-merge to EXACTLY the batch operator's registers over all
     documents — and stay exact when a batch's generation is re-committed
     (the at-least-once replay case max-merge exists to absorb)."""
+    from janet_spark.maintained import append, read
     from janet_spark.sketches import (
+        HLL_REGISTERS,
         hll_estimate_frame,
         hll_registers_frame,
-        incremental_hll_run,
-        read_hll_registers,
     )
     from janet_spark.streaming import hll_register_stream
 
@@ -512,15 +512,18 @@ def test_hll_register_stream_matches_batch_sketch(spark, tmp_path):
     q = hll_register_stream(spark, landing, regs, ckpt)
     q.awaitTermination(120)
 
-    merged = read_hll_registers(spark, regs)
+    merged = read(spark, HLL_REGISTERS, regs)
     full = hll_registers_frame(spark.read.parquet(landing))
     assert sorted(map(tuple, merged.collect())) == sorted(map(tuple, full.collect()))
 
     # simulate an at-least-once replay: re-commit batch 0's delta again
-    incremental_hll_run(
-        spark.read.parquet(landing).filter("doc_id < 200"), regs, "batch-replayed"
+    append(
+        HLL_REGISTERS,
+        spark.read.parquet(landing).filter("doc_id < 200"),
+        regs,
+        "batch-replayed",
     )
-    replayed = read_hll_registers(spark, regs)
+    replayed = read(spark, HLL_REGISTERS, regs)
     est_a = sorted(map(tuple, hll_estimate_frame(merged).collect()))
     est_b = sorted(map(tuple, hll_estimate_frame(replayed).collect()))
     assert est_a == est_b
